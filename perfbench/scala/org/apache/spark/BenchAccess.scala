@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** The one Spark-internal call the benchmark needs: wait until the
+  * listener bus has delivered every posted event, so a traced run's
+  * listener totals are complete before they are read. */
+object BenchAccess {
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
