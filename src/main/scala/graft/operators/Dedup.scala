@@ -364,8 +364,7 @@ object Dedup {
     * both need the pair graph — the most expensive subgraph in the
     * suite — so the second caller reuses the labels instead of
     * rebuilding the graph. An in-place rewrite of the input parquet
-    * re-keys structurally ([[graft.sources.ContentStamp]], round 13);
-    * [[invalidateClusterMemo]] remains for cold timing. The
+    * recomputes ([[graft.sources.ContentStamp]]). The
     * distributed fall-through is never memoized (its result is
     * corpus-sized, not driver-bounded). */
   def nearDupClusters(spark: SparkSession, dir: String, minJ: Double = ngramMinJ,
@@ -378,8 +377,8 @@ object Dedup {
       },
       Tables.documents(spark, dir).select(col("doc_id")),
       maxIters, driverMaxEdges,
-      (spark.sparkContext.applicationId, dir, "ngram", minJ,
-        graft.sources.ContentStamp.of(spark, s"$dir/documents.parquet")))
+      (spark.sparkContext.applicationId, dir, "ngram", minJ),
+      graft.sources.ContentStamp.of(spark, s"$dir/documents.parquet"))
 
   /** Connected components over an arbitrary undirected PAIR graph — the
     * engine behind [[nearDupClusters]] (d7, n-gram pairs) and
@@ -388,22 +387,15 @@ object Dedup {
     * `allIds` supplies the id universe as a single `doc_id` column
     * (rename at the call site); `memoKey._3` tags the pair SOURCE so
     * different graphs over the same dir don't collide in the memo;
-    * `memoKey._5` is the input relation's content stamp
-    * ([[graft.sources.ContentStamp]], round 13 — caller-computed,
-    * since only the caller knows which table the pairs derive from):
-    * an in-place rewrite re-keys structurally, stale-stamp entries
-    * purge at the next call. */
+    * `stamp` is the input relation's content stamp
+    * ([[graft.sources.ContentStamp]] — caller-computed, since only the
+    * caller knows which table the pairs derive from). */
   private[operators] def componentsOf(spark: SparkSession,
       pairsWithScratch: () => (DataFrame, Seq[DataFrame]),
       allIds: DataFrame, maxIters: Int, driverMaxEdges: Int,
-      memoKey: (String, String, String, Double, String)): DataFrame = {
-    if (driverMaxEdges > 0) {
-      clusterMemo.keySet.removeIf(k => k._1 == memoKey._1 &&
-        k._2 == memoKey._2 && k._3 == memoKey._3 &&
-        k._4 == memoKey._4 && k._5 != memoKey._5)
-      val hit = clusterMemo.get(memoKey)
-      if (hit != null) return labelsFor(spark, allIds, hit)
-    }
+      memoKey: (String, String, String, Double), stamp: String): DataFrame = {
+    val hit = if (driverMaxEdges > 0) clusterMemo.get(memoKey, stamp) else None
+    if (hit.isDefined) return labelsFor(spark, allIds, hit.get)
     // unarmed variant: the fast-path probe collect below is an ACTION
     // referencing this scratch — armed, the sweep would unpersist it
     // before the distributed fall-through materializes pairs fully
@@ -447,7 +439,7 @@ object Dedup {
         val labels = parent.keys.toSeq.map(x => (x, find(x)))
         pairs.unpersist()
         scratch.foreach(_.unpersist()) // fast-path result doesn't read them
-        clusterMemo.put(memoKey, labels)
+        clusterMemo.put(memoKey, stamp, labels)
         return labelsFor(spark, allIds, labels)
       }
     }
@@ -519,12 +511,8 @@ object Dedup {
     * bounded (≤ 2 × driverMaxEdges entries, longs only) and there is at
     * most one entry per (app, dir, source, threshold) actually queried,
     * so this cannot grow past a handful of bounded tables per session. */
-  private val clusterMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String, Double, String), Seq[(Long, Long)]]()
-
-  /** Drop memoized cluster labels (call after rewriting input parquet
-    * in place — memo entries assume session-immutable inputs). */
-  def invalidateClusterMemo(): Unit = clusterMemo.clear()
+  private[graft] val clusterMemo =
+    new graft.sources.ContentStamp.Memo[(String, String, String, Double), Seq[(Long, Long)]]
 
   /** Memo contract for Bench's partial re-time pass, declared HERE so
     * the knowledge lives next to the memo it describes: gate queries
@@ -542,8 +530,6 @@ object Dedup {
 
   /** Gate queries that TRAIN [[clusterMemo]] (see [[memoDeps]]). */
   val memoTrainers: Set[String] = Set("d7_near_dup_clusters")
-
-  private[graft] def clusterMemoSize: Int = clusterMemo.size
 
   /** Join a driver-held (doc_id → cluster_id) label table back over the
     * id universe; unlabeled ids are singletons labeling themselves. */
@@ -796,8 +782,11 @@ object Dedup {
   def sourceOverlap(spark: SparkSession, dir: String, k: Int = 3,
                     maxSources: Int = 10000): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
+    // a NULL source is no source: dropped up front from both the count
+    // and the gram aggregation below (collect_set would skip it
+    // silently, the distinct count would not)
     val nSrc = Tables.documents(spark, dir)
-      .select(col("source")).distinct()
+      .select(col("source")).filter(col("source").isNotNull).distinct()
       .agg(count(lit(1)).as("n_sources"))
     // ONE gram-keyed aggregation replaces the r18 distinct + cached
     // self-join (two extra full-relation exchanges): per gram, the
@@ -812,6 +801,7 @@ object Dedup {
     // keep peak row width at S, never S².
     val byGram = ScratchCache.arm( // feeds sizes + the pair explosion
       Tables.documentsFanned(spark, dir) // 3-gram explode: map-heavy (Tables.fanOut)
+        .filter(col("source").isNotNull)
         .select(col("source"), tokens(col("text")).as("toks"))
         .select(col("source"),
           explode(array_distinct(tokenWindows(col("toks"), k, 1))).as("gram"))

@@ -297,20 +297,19 @@ object Hnsw {
     * deterministic function of (corpus, m, efConstruction), so a session
     * answering many queries builds it once (the production shape: build
     * once, serve). */
-  private val graphMemo = new java.util.concurrent.ConcurrentHashMap[(String, String, Int, Int, String), Graph]()
-  private[graft] def invalidateGraphMemo(): Unit = graphMemo.clear()
+  private[graft] val graphMemo =
+    new graft.sources.ContentStamp.Memo[(String, String, Int, Int), Graph]
 
   private[graft] def graphFor(spark: SparkSession, dir: String,
                               m: Int, efConstruction: Int): Graph = {
     // keyed by applicationId like every model memo in Similarity
-    // (centsFor/booksFor) PLUS the corpus relation's content stamp
-    // (round 13): a corpus regenerated under the same path — new
-    // session or same — must rebuild, never serve a stale graph
-    // (writeHnswIndex goes through here, so a stale memo wouldn't just
-    // answer wrong, it would PERSIST the stale graph into an index)
-    val stamp = corpusStamp(spark, dir)
-    graphMemo.keySet.removeIf(k => k._2 == dir && k._5 != stamp)
-    graphMemo.computeIfAbsent((spark.sparkContext.applicationId, dir, m, efConstruction, stamp), _ => {
+    // (centsFor/booksFor) and stamped by the corpus relation: a corpus
+    // regenerated under the same path — new session or same — must
+    // rebuild, never serve a stale graph (writeHnswIndex goes through
+    // here, so a stale memo wouldn't just answer wrong, it would
+    // PERSIST the stale graph into an index)
+    graphMemo((spark.sparkContext.applicationId, dir, m, efConstruction),
+      graft.sources.ContentStamp.ofCorpus(spark, dir)) {
       // bounded collect: the corpus vector relation, checked against
       // driverMaxVectors BEFORE collecting (count is a cheap column-
       // pruned scan; collecting first would OOM before the require)
@@ -323,7 +322,7 @@ object Hnsw {
       val rows = emb.select(col("vec_id"), col("embedding"))
         .as[(Long, Array[Float])].collect().sortBy(_._1)
       buildGraph(rows.map(_._1), rows.map(_._2), m, efConstruction)
-    })
+    }
   }
 
   /** v18: HNSW ANN — driver graph search generates each query's
@@ -621,6 +620,7 @@ object Hnsw {
     @volatile private var budgetOverride: Option[Long] = None
     private def budget: Long = budgetOverride.getOrElse(defaultBudget)
     private val budgetScopeActive = new java.util.concurrent.atomic.AtomicBoolean(false)
+    graft.sources.ContentStamp.Memo.onInvalidateAll(() => invalidate())
 
     /** Spec hook: run `body` with the LRU budget set to `n` — exercise
       * eviction at a small budget without forking a JVM for the -D
@@ -701,12 +701,6 @@ object Hnsw {
     }
   }
 
-  /** Hidden-file convention (shared with Spark's own listing and
-    * [[graft.sources.ContentStamp]]): `_` metadata and `.` working
-    * files are not shard content. */
-  private def isVisible(name: String): Boolean =
-    graft.sources.ContentStamp.isVisible(name)
-
   /** ONE recursive FS listing of `indexPath/graph` → (shard, content
     * stamp) per NON-EMPTY `shard=` partition, ascending (stamps via
     * [[graft.sources.ContentStamp.ofChildren]] — the residency key
@@ -756,7 +750,7 @@ object Hnsw {
     val dir = new org.apache.hadoop.fs.Path(s"$indexPath/graph/shard=$shard")
     val fs = dir.getFileSystem(conf)
     val files = fs.listStatus(dir).toSeq
-      .filter(f => f.isFile && isVisible(f.getPath.getName))
+      .filter(f => f.isFile && graft.sources.ContentStamp.isVisible(f.getPath.getName))
       .map(_.getPath).sortBy(_.getName)
     files.iterator.flatMap { p =>
       import org.apache.parquet.example.data.Group
@@ -792,21 +786,17 @@ object Hnsw {
     }
   }
 
-  /** Drift validations already paid this session, keyed by the index
-    * CONTENT stamp — a serving tier validates corpus/index agreement
-    * once at graph load, not per batch; any index rewrite (new stamp)
-    * or new corpus dir re-validates. Stale-stamp entries for the same
-    * (app, dir, indexPath) are purged before each new validation (the
-    * removeIf pattern every stamp-keyed memo uses): the stamp embeds
-    * the full per-shard file listing, so under a maintain stream every
-    * batch mints a new one — without the purge the designed steady
-    * state (maintain + per-batch serve) would accrete dead entries
-    * forever. */
-  private val shardedDriftChecked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String, String, String)]()
-  private[graft] def invalidateDriftChecks(): Unit = shardedDriftChecked.clear()
-  /** Observability + the spec's leak pin: live drift entries. */
-  private[graft] def driftCheckedSize: Int = shardedDriftChecked.size()
+  /** Drift validations already paid this session, one per (app, dir,
+    * indexPath), stamped by the index AND corpus content — a serving
+    * tier validates corpus/index agreement once at graph load, not per
+    * batch; any index rewrite or corpus rewrite (new stamp)
+    * re-validates. The stamp embeds the full per-shard file listing, so
+    * under a maintain stream every batch mints a new one; replacing the
+    * key's entry keeps the designed steady state (maintain + per-batch
+    * serve) at one live entry per served index. A refused validation
+    * stores nothing, so it refuses again on the next call. */
+  private[graft] val shardedDriftChecked =
+    new graft.sources.ContentStamp.Memo[(String, String, String), Unit]
 
   /** Serve from a [[writeHnswIndexSharded]] index — the fan-out/merge
     * deployment in its SERVING-TIER shape: the bounded query set fans
@@ -854,12 +844,9 @@ object Hnsw {
     // corpus rewrite (new corpus stamp — the ContentStamp contract
     // every other memo carries) re-validates.
     val globalStamp = stamps.map { case (s, st) => s"$s=$st" }.mkString("|") +
-      "||" + corpusStamp(spark, dir)
-    val driftKey = (spark.sparkContext.applicationId, dir, indexPath, globalStamp)
-    shardedDriftChecked.removeIf(k =>
-      k._1 == driftKey._1 && k._2 == dir && k._3 == indexPath &&
-        k._4 != globalStamp)
-    if (!shardedDriftChecked.contains(driftKey)) {
+      "||" + graft.sources.ContentStamp.ofCorpus(spark, dir)
+    shardedDriftChecked((spark.sparkContext.applicationId, dir, indexPath),
+        globalStamp) {
       val graph = spark.read.parquet(s"$indexPath/graph")
       val level0Ids = graph.filter(col("level") === 0).select(col("vec_id"))
       val nIndexed = level0Ids.count()
@@ -875,7 +862,6 @@ object Hnsw {
           s"the index at $indexPath never saw — un-indexed vectors are in no " +
           "shard graph, so no walk can ever reach them (silent recall loss); " +
           "appendHnswIndexSharded the new vectors or rebuild")
-      shardedDriftChecked.add(driftKey)
     }
     val qs = collectQueries(spark, emb, nQueries)
     serveShardedCore(spark, indexPath, qs, k, efSearch, stamps, m, efC)
@@ -1067,11 +1053,12 @@ object Hnsw {
       md.digest(stamp.getBytes("UTF-8")).map("%02x".format(_)).mkString
     }
 
-    /** One live (digest, capacity, bloom) per (app, index) — replaced
-      * in place on every append, so the designed steady state holds
-      * one entry per maintained index, not one per batch. */
-    private val memo = new java.util.concurrent.ConcurrentHashMap[(String, String), (String, Long, BloomFilter)]()
-    private[graft] def invalidateBloomMemo(): Unit = memo.clear()
+    /** One live (capacity, bloom) per (app, index), stamped by the
+      * digest of the `graph/` stamp it is valid for — replaced in place
+      * on every append, so the designed steady state holds one entry
+      * per maintained index, not one per batch. */
+    private[graft] val memo =
+      new graft.sources.ContentStamp.Memo[(String, String), (Long, BloomFilter)]
     /** Observability + the spec's rebuild pin. */
     private val rebuilds = new java.util.concurrent.atomic.AtomicLong()
     private[graft] def rebuildCount: Long = rebuilds.get()
@@ -1138,10 +1125,10 @@ object Hnsw {
                          stamp: String): Option[(Long, BloomFilter)] = {
       val key = (spark.sparkContext.applicationId, indexPath)
       val dg = digestOf(stamp)
-      Option(memo.get(key)).collect { case (d, c, b) if d == dg => (c, b) }
+      memo.get(key, dg)
         .orElse(readSidecar(spark, indexPath).collect {
           case (d, c, b) if d == dg =>
-            memo.put(key, (dg, c, b)); (c, b)
+            memo.put(key, dg, (c, b)); (c, b)
         })
     }
 
@@ -1175,7 +1162,7 @@ object Hnsw {
           }
         writeSidecar(spark, indexPath, digestOf(stamp), cap, b)
         memo.put((spark.sparkContext.applicationId, indexPath),
-          (digestOf(stamp), cap, b))
+          digestOf(stamp), (cap, b))
         (cap, b)
       }
 
@@ -1208,7 +1195,7 @@ object Hnsw {
       val dg = digestOf(
         graft.sources.ContentStamp.of(spark, s"$indexPath/graph"))
       writeSidecar(spark, indexPath, dg, cap, bloom)
-      memo.put((spark.sparkContext.applicationId, indexPath), (dg, cap, bloom))
+      memo.put((spark.sparkContext.applicationId, indexPath), dg, (cap, bloom))
     }
 
     /** After a write that did NOT change the id set (reshard /
@@ -1772,9 +1759,6 @@ object Hnsw {
       maxLevel, m, efC)
     val grown = insertAll(base, newRows.map(_._1), newRows.map(_._2))
     writeGraphParquet(spark, grown, indexPath)
-    // the serve memo may hold the PRE-append graph for this index path
-    // (any dir/session): drop those entries so the next serve reloads
-    servedMemo.keySet.removeIf(_._3 == indexPath)
     newRows.length.toLong
   }
 
@@ -1782,12 +1766,10 @@ object Hnsw {
     * stamp) — the annIvfPqServeQueries model-memo idea for the graph
     * family, stamp-keyed like [[ShardGraphCache]] (round 13): an index
     * REWRITTEN at the same path, or a corpus dir regenerated under the
-    * same name, changes the stamp and re-keys structurally, so a stale
-    * graph can't be looked up; stale-stamp entries for the same
-    * (dir, indexPath) are purged at the next load, keeping the map one
-    * live entry per served index. */
-  private val servedMemo = new java.util.concurrent.ConcurrentHashMap[(String, String, String, String), Graph]()
-  private[graft] def invalidateServedMemo(): Unit = servedMemo.clear()
+    * same name, changes the stamp, so a stale graph is reloaded, never
+    * served — one live entry per (session, dir, served index). */
+  private[graft] val servedMemo =
+    new graft.sources.ContentStamp.Memo[(String, String, String), Graph]
 
   /** Content stamp of a single-graph index's `graph/` relation plus
     * the corpus relation's own file listing (the memoized graph holds
@@ -1796,16 +1778,8 @@ object Hnsw {
     * loud, named refusal. */
   private def servedStamp(spark: SparkSession, dir: String,
                           indexPath: String): String =
-    fileListingStamp(spark, s"$indexPath/graph") + "||" + corpusStamp(spark, dir)
-
-  /** Content stamp of the corpus relation — keys [[graphFor]]'s build
-    * memo (and half of [[servedStamp]]): a regenerated corpus under
-    * the same path must rebuild. */
-  private def corpusStamp(spark: SparkSession, dir: String): String =
-    graft.sources.ContentStamp.ofCorpus(spark, dir)
-
-  private def fileListingStamp(spark: SparkSession, pathStr: String): String =
-    graft.sources.ContentStamp.of(spark, pathStr)
+    graft.sources.ContentStamp.of(spark, s"$indexPath/graph") + "||" +
+      graft.sources.ContentStamp.ofCorpus(spark, dir)
 
   /** Load a [[writeHnswIndex]] graph: dials and entry from `_meta.json`
     * (REQUIRED — the self-description contract), adjacency from
@@ -1816,15 +1790,13 @@ object Hnsw {
     * vector missing from the graph has no in-edges, so no walk can
     * ever shortlist it). */
   private def loadGraph(spark: SparkSession, dir: String, indexPath: String): Graph = {
-    // keyed by (applicationId, dir, indexPath, content stamp) — the
-    // graph's VECTORS come from `dir`, so the same index served
-    // against a different corpus relation must reload, and a rewrite
-    // of either relation under the SAME names re-keys structurally
+    // keyed by (applicationId, dir, indexPath), stamped by both
+    // relations — the graph's VECTORS come from `dir`, so the same
+    // index served against a different corpus relation must reload,
+    // and a rewrite of either relation under the SAME names reloads
     // (never reuse shortlists walked over the wrong vectors/graph)
-    val stamp = servedStamp(spark, dir, indexPath)
-    servedMemo.keySet.removeIf(k =>
-      k._2 == dir && k._3 == indexPath && k._4 != stamp)
-    servedMemo.computeIfAbsent((spark.sparkContext.applicationId, dir, indexPath, stamp), _ => {
+    servedMemo((spark.sparkContext.applicationId, dir, indexPath),
+      servedStamp(spark, dir, indexPath)) {
       import graft.sources.IndexMeta.{intField, strField}
       val meta = graft.sources.IndexMeta.readRaw(indexPath, "writeHnswIndex")
       require(strField(meta, "family") == "hnsw",
@@ -1871,7 +1843,7 @@ object Hnsw {
           "so no graph walk can ever reach them (silent recall loss); " +
           "appendHnswIndex the new vectors or rebuild")
       new Graph(ids, rows.map(_._2), layers, resolve(entryId, "entry"), maxLevel, m, efC)
-    })
+    }
   }
 
   /** Serve v18 from the at-rest graph — same shortlist + exact Spark

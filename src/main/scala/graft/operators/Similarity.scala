@@ -217,43 +217,29 @@ object Similarity {
     * trainer (v4/v8) carries the training cost and later callers (v9,
     * the `_prod` lines) see serving cost. Values are tiny
     * (≤ nClusters×dim / m×nCodes×subDim floats); keys include the
-    * applicationId so a new session never sees a stale model, PLUS the
-    * corpus relation's content stamp ([[graft.sources.ContentStamp]],
-    * round 13): a corpus rewritten in place re-keys structurally, so a
-    * stale model can't be looked up — and can't be PERSISTED into an
-    * index by [[writeAnnIndex]]. [[invalidateModelMemo]] remains for
-    * cold-train timing (Bench/TimeQ), not correctness. */
-  private val centsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int, Int, Double, String), Seq[(Long, Array[Float])]]()
-  private val booksMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int, Int, Int, String), Seq[Seq[Array[Float]]]]()
-
-  private def corpusStamp(spark: SparkSession, dir: String): String =
-    graft.sources.ContentStamp.ofCorpus(spark, dir)
+    * applicationId so a new session never sees a stale model, and each
+    * entry carries the corpus relation's content stamp
+    * ([[graft.sources.ContentStamp]]): a corpus rewritten in place
+    * retrains, so a stale model can't be looked up — and can't be
+    * PERSISTED into an index by [[writeAnnIndex]]. */
+  private val centsMemo = new graft.sources.ContentStamp.Memo[
+    (String, String, Int, Int, Double), Seq[(Long, Array[Float])]]
+  private val booksMemo = new graft.sources.ContentStamp.Memo[
+    (String, String, Int, Int, Int), Seq[Seq[Array[Float]]]]
 
   private[graft] def centsFor(spark: SparkSession, dir: String, nClusters: Int,
-                       iters: Int, trainFraction: Double): Seq[(Long, Array[Float])] = {
-    val stamp = corpusStamp(spark, dir)
-    centsMemo.keySet.removeIf(k => k._2 == dir && k._6 != stamp)
-    centsMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir, nClusters, iters, trainFraction, stamp),
-      _ => ivfCentroids(Tables.embeddings(spark, dir), nClusters, iters, trainFraction))
-  }
+                       iters: Int, trainFraction: Double): Seq[(Long, Array[Float])] =
+    centsMemo((spark.sparkContext.applicationId, dir, nClusters, iters, trainFraction),
+      graft.sources.ContentStamp.ofCorpus(spark, dir)) {
+      ivfCentroids(Tables.embeddings(spark, dir), nClusters, iters, trainFraction)
+    }
 
   private def booksFor(spark: SparkSession, dir: String, m: Int,
-                       nCodes: Int, iters: Int): Seq[Seq[Array[Float]]] = {
-    val stamp = corpusStamp(spark, dir)
-    booksMemo.keySet.removeIf(k => k._2 == dir && k._6 != stamp)
-    booksMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir, m, nCodes, iters, stamp),
-      _ => pqCodebooks(Tables.embeddings(spark, dir), m, nCodes, iters))
-  }
-
-  /** Drop memoized ANN models (call after rewriting input parquet in
-    * place, or to time a cold train — see Bench/TimeQ). */
-  def invalidateModelMemo(): Unit = {
-    centsMemo.clear(); booksMemo.clear(); residBooksMemo.clear()
-  }
+                       nCodes: Int, iters: Int): Seq[Seq[Array[Float]]] =
+    booksMemo((spark.sparkContext.applicationId, dir, m, nCodes, iters),
+      graft.sources.ContentStamp.ofCorpus(spark, dir)) {
+      pqCodebooks(Tables.embeddings(spark, dir), m, nCodes, iters)
+    }
 
   /** Memo contract for Bench's partial re-time pass, declared HERE next
     * to the memo it describes (same shape as `Dedup.memoDeps`): gate /
@@ -1080,27 +1066,24 @@ object Similarity {
 
   /** Residual codebook memo (the [[booksMemo]] pattern — residual
     * codebooks depend on the coarse quantizer too, so the key carries
-    * both dial sets). */
-  private val residBooksMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String, String), Seq[Seq[Array[Float]]]]()
+    * both dial sets). Its own instance, not [[centsMemo]]: the compute
+    * calls [[centsFor]], and a memo's compute must not update itself. */
+  private val residBooksMemo = new graft.sources.ContentStamp.Memo[
+    (String, String, String), Seq[Seq[Array[Float]]]]
 
   private def residBooksFor(spark: SparkSession, dir: String, nClusters: Int,
                             cIters: Int, m: Int, nCodes: Int,
-                            iters: Int): Seq[Seq[Array[Float]]] = {
-    val stamp = corpusStamp(spark, dir)
-    residBooksMemo.keySet.removeIf(k => k._2 == dir && k._4 != stamp)
-    residBooksMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir,
-        s"$nClusters:$cIters:$m:$nCodes:$iters", stamp),
-      _ => {
-        val emb = Tables.embeddings(spark, dir)
-        val cents = centsFor(spark, dir, nClusters, cIters, trainFraction = 1.0)
-        pqCodebooks(
-          emb.select(col("vec_id"),
-            residualCol(cents, col("embedding")).as("embedding")),
-          m, nCodes, iters)
-      })
-  }
+                            iters: Int): Seq[Seq[Array[Float]]] =
+    residBooksMemo((spark.sparkContext.applicationId, dir,
+        s"$nClusters:$cIters:$m:$nCodes:$iters"),
+      graft.sources.ContentStamp.ofCorpus(spark, dir)) {
+      val emb = Tables.embeddings(spark, dir)
+      val cents = centsFor(spark, dir, nClusters, cIters, trainFraction = 1.0)
+      pqCodebooks(
+        emb.select(col("vec_id"),
+          residualCol(cents, col("embedding")).as("embedding")),
+        m, nCodes, iters)
+    }
 
   /** v9 with RESIDUAL encoding — the FAISS IVFPQ default: PQ codebooks
     * are trained on (and codes encode) r = x − centroid(cell(x))
@@ -1486,8 +1469,8 @@ object Similarity {
       },
       Tables.embeddings(spark, dir).select(col("vec_id").as("doc_id")),
       maxIters, driverMaxEdges,
-      (spark.sparkContext.applicationId, dir, source, minCos,
-        corpusStamp(spark, dir)))
+      (spark.sparkContext.applicationId, dir, source, minCos),
+      graft.sources.ContentStamp.ofCorpus(spark, dir))
       .select(col("doc_id").as("vec_id"), col("cluster_id"))
   }
 

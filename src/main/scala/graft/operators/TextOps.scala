@@ -40,8 +40,7 @@ object TextOps {
 
   /** [[quality]] over ANY (doc_id, text) relation — the per-batch form
     * the streaming intake scores each arriving micro-batch with. */
-  def qualityOn(docs: DataFrame): DataFrame = {
-    val stop = Seq("a", "the")
+  def qualityOn(docs: DataFrame): DataFrame =
     docs
       .withColumn("toks", tokens("text"))
       .select(
@@ -49,9 +48,12 @@ object TextOps {
         length(col("text")).as("n_chars"),
         size(col("toks")).as("n_tokens"),
         size(array_distinct(col("toks"))).as("n_distinct_tokens"),
-        (size(filter(col("toks"), t => t.isin(stop.map(lit(_)): _*)))
-          / size(col("toks")).cast("double")).as("stopword_ratio"))
-  }
+        stopwordRatio(col("toks")).as("stopword_ratio"))
+
+  /** Share of `toks` in the tiny built-in stopword set — one definition
+    * for t1's score and t10's rule. */
+  private def stopwordRatio(toks: Column): Column =
+    size(filter(toks, t => t.isin(lit("a"), lit("the")))) / size(toks).cast("double")
 
   /** Token counting with a BPE-ish regex (word pieces + standalone
     * punctuation), the classic pre-tokenizer approximation. */
@@ -235,7 +237,6 @@ object TextOps {
     * the decision stage becomes a map-only scan (guide §1.2: remove
     * shuffles the computation never needed). */
   def filterDecisionOn(docs: DataFrame): DataFrame = {
-    val stop = Seq("a", "the")
     // fold over the sorted array: (previous token, current run length,
     // best run length); equal neighbors extend the run, others reset it
     def maxRun(sortedToks: Column): Column = aggregate(
@@ -249,14 +250,15 @@ object TextOps {
           greatest(acc.getField("best"), run).as("best"))
       },
       acc => acc.getField("best"))
+    // NULL text has no tokens: size(NULL) is NULL, which would slip
+    // past every rule, so it counts as zero tokens and fails too_short
     docs
       .withColumn("toks", tokens("text"))
       .select(col("doc_id"),
-        size(col("toks")).as("n_tokens"),
+        coalesce(size(col("toks")), lit(0)).as("n_tokens"),
         (maxRun(array_sort(col("toks")))
           / size(col("toks")).cast("double")).as("max_tok_frac"),
-        (size(filter(col("toks"), t => t.isin(stop.map(lit(_)): _*)))
-          / size(col("toks")).cast("double")).as("stopword_ratio"))
+        stopwordRatio(col("toks")).as("stopword_ratio"))
       .select(col("doc_id"), col("n_tokens"), col("max_tok_frac"),
         col("stopword_ratio"),
         when(col("n_tokens") < 15, "too_short")
@@ -1382,17 +1384,15 @@ object TextOps {
     * training is a deterministic function of (corpus, params), so
     * t27 trains once per session and t28's tokenization serves the
     * memoized table. Keyed by applicationId — a new session never
-    * sees a stale model; [[invalidateBpeMemo]] for in-place rewrites
-    * and Bench's cold-pass contract. */
-  private val bpeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int, Int), Seq[(Int, String, String, String, Long)]]()
-
-  def invalidateBpeMemo(): Unit = bpeMemo.clear()
+    * sees a stale model — and stamped by `documents.parquet`, so an
+    * in-place corpus rewrite retrains ([[graft.sources.ContentStamp]]). */
+  private val bpeMemo = new graft.sources.ContentStamp.Memo[
+    (String, String, Int, Int), Seq[(Int, String, String, String, Long)]]
 
   private def trainBpe(spark: SparkSession, dir: String, nMerges: Int,
                        maxDistinctWords: Int): Seq[(Int, String, String, String, Long)] =
-    bpeMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir, nMerges, maxDistinctWords), _ => {
+    bpeMemo((spark.sparkContext.applicationId, dir, nMerges, maxDistinctWords),
+      graft.sources.ContentStamp.of(spark, s"$dir/documents.parquet")) {
         require(nMerges >= 1 && maxDistinctWords >= 1)
         val hist = Tables.documents(spark, dir)
           .select(explode(tokens("text")).as("word"))
@@ -1437,7 +1437,7 @@ object TextOps {
           }
         }
         merges.toSeq
-      })
+      }
 
   /** t28: tokenize the corpus with the learned BPE merges — the apply
     * side of t27, closing the loop a real pipeline runs (train the
@@ -1497,10 +1497,9 @@ object TextOps {
       .toDF("piece", "count", "logprob")
   }
 
-  private val unigramMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int, Int, Int, Int), Seq[(String, Long, Double, Double)]]()
-
-  def invalidateUnigramMemo(): Unit = unigramMemo.clear()
+  /** The unigram model memo — the [[bpeMemo]] contract. */
+  private val unigramMemo = new graft.sources.ContentStamp.Memo[
+    (String, String, Int, Int, Int, Int), Seq[(String, Long, Double, Double)]]
 
   /** Returns (piece, count, logprob rounded to 6 dp, logprob RAW). The
     * rounded value is t32's display/output column; the RAW value is
@@ -1512,9 +1511,9 @@ object TextOps {
   private def trainUnigram(spark: SparkSession, dir: String, vocabSize: Int,
                            maxPieceLen: Int, emIters: Int,
                            maxDistinctWords: Int): Seq[(String, Long, Double, Double)] =
-    unigramMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir, vocabSize, maxPieceLen, emIters,
-        maxDistinctWords), _ => {
+    unigramMemo((spark.sparkContext.applicationId, dir, vocabSize, maxPieceLen,
+        emIters, maxDistinctWords),
+      graft.sources.ContentStamp.of(spark, s"$dir/documents.parquet")) {
         require(vocabSize >= 1 && maxPieceLen >= 1 && emIters >= 1)
         val rows = Tables.documents(spark, dir)
           .select(explode(tokens("text")).as("word"))
@@ -1564,7 +1563,7 @@ object TextOps {
           (p, c, BigDecimal(raw)
             .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble, raw)
         }
-      })
+      }
 
   /** t33: tokenize the corpus with the learned unigram-LM pieces — the
     * apply side of t32, via the native `unigram_segment` expression

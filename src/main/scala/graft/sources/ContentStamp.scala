@@ -6,14 +6,22 @@ import org.apache.spark.sql.SparkSession
   * every corpus-derived driver memo (round 13, generalizing the
   * sharded-HNSW `ShardGraphCache` contract): the sorted
   * path:length:mtime[:etag] listing of a relation's visible files
-  * changes exactly when the relation's bytes change, so a memo KEYED
-  * by the stamp can never return a value derived from rewritten data —
-  * staleness becomes a lookup miss, not a protocol the caller must
-  * remember (`invalidate*Memo()` remains for cold-timing, but
-  * correctness no longer depends on anyone calling it). One listing
-  * round per directory level to the relation's own filesystem per
-  * memoized call — noise next to what these memos guard (k-means
-  * training, union-find clustering, graph construction).
+  * changes exactly when the relation's bytes change. One listing round
+  * per directory level to the relation's own filesystem per memoized
+  * call — noise next to what these memos guard (k-means training,
+  * union-find clustering, graph construction).
+  *
+  * THE MEMO CONTRACT ([[ContentStamp.Memo]]): every driver memo keys
+  * an entry by what the caller derives it from (session, paths, dials)
+  * and stores beside it the stamp of the relation it was built from. A
+  * lookup under a different stamp recomputes and replaces the entry in
+  * one atomic step, so a memo can never return a value derived from
+  * rewritten data — staleness is a lookup miss, not a protocol the
+  * caller must remember — and a key never holds more than one entry,
+  * however many rewrites it sees. Every memo registers itself at
+  * construction; [[ContentStamp.Memo.invalidateAll]] is the one
+  * cold-state reset (timing harnesses), and correctness never depends
+  * on anyone calling it.
   *
   * GRANULARITY — what the stamp can and cannot see. Each entry is
   * name:length:mtime, so an in-place rewrite that keeps the file NAME
@@ -127,4 +135,56 @@ object ContentStamp {
     * cannot drift apart). */
   def ofCorpus(spark: SparkSession, dir: String): String =
     of(spark, s"$dir/embeddings.parquet")
+
+  /** A driver-side memo under the stamp contract (class doc): one
+    * entry per key, tagged with the stamp it was built from. */
+  final class Memo[K, V] {
+    private val entries =
+      new java.util.concurrent.ConcurrentHashMap[K, (String, V)]()
+    Memo.onInvalidateAll(() => clear())
+
+    /** The entry for `key` if built under `stamp`; otherwise `compute`
+      * it and replace whatever the key held, atomically — concurrent
+      * first callers compute once. A `compute` that throws leaves NO
+      * entry (a stale one is dropped too), so a refusal raised inside
+      * it runs again on the next call. `compute` must not touch this
+      * same memo (the map rejects a recursive update). */
+    def apply(key: K, stamp: String)(compute: => V): V = {
+      var failure: Throwable = null
+      val e = entries.compute(key, (_, old) =>
+        if (old != null && old._1 == stamp) old
+        else try (stamp, compute) catch { case t: Throwable => failure = t; null })
+      if (failure != null) throw failure
+      e._2
+    }
+
+    /** Lookup only: the value for `key` if built under `stamp`. */
+    def get(key: K, stamp: String): Option[V] =
+      Option(entries.get(key)).collect { case (s, v) if s == stamp => v }
+
+    /** Store `value` for `key` as built under `stamp`, replacing any
+      * entry — for callers that memoize only some outcomes. */
+    def put(key: K, stamp: String, value: V): Unit = {
+      entries.put(key, (stamp, value)); ()
+    }
+
+    def remove(key: K): Unit = { entries.remove(key); () }
+    def clear(): Unit = entries.clear()
+    def size: Int = entries.size
+  }
+
+  object Memo {
+    private val resets =
+      new java.util.concurrent.CopyOnWriteArrayList[() => Unit]()
+
+    /** Register a reset [[invalidateAll]] runs — every [[Memo]] does so
+      * at construction; non-`Memo` driver state joins explicitly. */
+    private[graft] def onInvalidateAll(reset: () => Unit): Unit = {
+      resets.add(reset); ()
+    }
+
+    /** Drop every registered memo entry: the one cold-state reset for
+      * timing a full train + answer pipeline. */
+    def invalidateAll(): Unit = resets.forEach(r => r())
+  }
 }

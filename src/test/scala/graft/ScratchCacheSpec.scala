@@ -29,7 +29,7 @@ class ScratchCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     ScratchCache.drain()
     spark.catalog.clearCache()
     // memo-cold so nearDupClusters builds (and arms) the real pair graph
-    operators.Dedup.invalidateClusterMemo()
+    operators.Dedup.clusterMemo.clear()
     // one persisting operator per family, materialized the way a caller would
     operators.Dedup.ngramJaccard(spark, sf).count()          // docs + prefix index
     operators.Dedup.minhashLsh(spark, sf).count()            // docs + banded index

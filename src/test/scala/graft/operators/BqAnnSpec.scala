@@ -86,12 +86,12 @@ class BqAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
           x => (x.cast("double") * (pmod(col("vec_id"), lit(7)) + 1)).cast("float"))
           .as("embedding"))
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    Similarity.invalidateModelMemo()
+    graft.sources.ContentStamp.Memo.invalidateAll()
     try {
       val scaled = pairs(Similarity.annIvfBq(spark, dir, nprobe = 16, rerank = 192))
-      Similarity.invalidateModelMemo()
+      graft.sources.ContentStamp.Memo.invalidateAll()
       val base = pairs(Similarity.annIvfBq(spark, sf, nprobe = 16, rerank = 192))
       assert(scaled === base)
-    } finally Similarity.invalidateModelMemo()
+    } finally graft.sources.ContentStamp.Memo.invalidateAll()
   }
 }

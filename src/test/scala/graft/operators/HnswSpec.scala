@@ -41,13 +41,13 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("construction and search are deterministic") {
     val a = rows(Hnsw.annHnsw(spark, sf, efSearch = 64))
-    Hnsw.invalidateGraphMemo()
+    Hnsw.graphMemo.clear()
     val b = rows(Hnsw.annHnsw(spark, sf, efSearch = 64))
     assert(a == b)
   }
 
   test("the graph memo is a real memo (same instance within a session)") {
-    Hnsw.invalidateGraphMemo()
+    Hnsw.graphMemo.clear()
     val g1 = Hnsw.graphFor(spark, sf, 8, 96)
     val g2 = Hnsw.graphFor(spark, sf, 8, 96)
     assert(g1 eq g2)
@@ -65,14 +65,14 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("serve from the at-rest index == in-session at equal dials") {
     val idx = java.nio.file.Files.createTempDirectory("hnsw-idx").toString
     Hnsw.writeHnswIndex(spark, sf, idx)
-    Hnsw.invalidateServedMemo()
+    Hnsw.servedMemo.clear()
     val served = rows(Hnsw.annHnswServe(spark, sf, idx, efSearch = 256))
     val inSession = rows(Hnsw.annHnsw(spark, sf, efSearch = 256))
     assert(served == inSession)
   }
 
   test("serve refuses a directory without _meta.json") {
-    Hnsw.invalidateServedMemo()
+    Hnsw.servedMemo.clear()
     val bare = java.nio.file.Files.createTempDirectory("hnsw-bare").toString
     val e = intercept[IllegalArgumentException] {
       Hnsw.annHnswServe(spark, sf, bare).collect()
@@ -82,7 +82,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("serve refuses an index of a different family") {
-    Hnsw.invalidateServedMemo()
+    Hnsw.servedMemo.clear()
     val idx = java.nio.file.Files.createTempDirectory("hnsw-wrongfam").toString
     Similarity.writeAnnIndex(spark, sf, idx) // a pq-family IVF index
     val e = intercept[IllegalArgumentException] {
@@ -101,7 +101,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val idx = java.nio.file.Files.createTempDirectory("hnsw-shidx").toString
     Hnsw.writeHnswIndexSharded(spark, sf, idx, nShards = 2)
     val sharded2 = rows(Hnsw.annHnswServeSharded(spark, sf, idx, efSearch = 256))
-    Hnsw.invalidateServedMemo()
+    Hnsw.servedMemo.clear()
     val single = java.nio.file.Files.createTempDirectory("hnsw-sgidx").toString
     Hnsw.writeHnswIndex(spark, sf, single)
     assert(sharded2 == rows(Hnsw.annHnswServe(spark, sf, single, efSearch = 256)),
@@ -151,7 +151,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val idx = java.nio.file.Files.createTempDirectory("hnsw-resident").toString
     Hnsw.writeHnswIndexSharded(spark, sf, idx, nShards = 4)
     Hnsw.ShardGraphCache.invalidate()
-    Hnsw.invalidateDriftChecks()
+    Hnsw.shardedDriftChecked.clear()
     val first = rows(Hnsw.annHnswServeSharded(spark, sf, idx, efSearch = 64))
     val loadsAfterFirst = Hnsw.ShardGraphCache.loadCount
     assert(Hnsw.ShardGraphCache.residentShards(idx) == Set(0, 1, 2, 3),
@@ -187,7 +187,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val idx = java.nio.file.Files.createTempDirectory("hnsw-res-app").toString
     Hnsw.writeHnswIndexSharded(spark, base, idx, nShards = 4)
     Hnsw.ShardGraphCache.invalidate()
-    Hnsw.invalidateDriftChecks()
+    Hnsw.shardedDriftChecked.clear()
     Hnsw.annHnswServeSharded(spark, base, idx).count() // populate residency
     val loads0 = Hnsw.ShardGraphCache.loadCount
     // additions all ≡ 0 (mod 4): append rewrites shard 0 only
@@ -207,7 +207,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val idx = java.nio.file.Files.createTempDirectory("hnsw-rewrite").toString
     Hnsw.writeHnswIndexSharded(spark, sf, idx, nShards = 4)
     Hnsw.ShardGraphCache.invalidate()
-    Hnsw.invalidateDriftChecks()
+    Hnsw.shardedDriftChecked.clear()
     Hnsw.annHnswServeSharded(spark, sf, idx).count() // resident @ 4 shards
     // overwrite IN PLACE with a different shard count (a re-shard —
     // the operational event a path-keyed cache would serve stale)
@@ -256,7 +256,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val idx = java.nio.file.Files.createTempDirectory("hnsw-drift").toString
     Hnsw.writeHnswIndex(spark, base, idx)
     // corpus GREW past the index: un-indexed vectors are unreachable
-    Hnsw.invalidateServedMemo()
+    Hnsw.servedMemo.clear()
     val grown = forge(120)
     val e1 = intercept[IllegalArgumentException] {
       Hnsw.annHnswServe(spark, grown, idx).collect()
@@ -264,7 +264,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e1.getMessage.contains("never saw") &&
       e1.getMessage.contains("appendHnswIndex"), e1.getMessage)
     // corpus MISSING indexed ids: a graph node has no vector to walk
-    Hnsw.invalidateServedMemo()
+    Hnsw.servedMemo.clear()
     val shifted = forge(100, from = 50)
     val e2 = intercept[IllegalArgumentException] {
       Hnsw.annHnswServe(spark, shifted, idx).collect()
@@ -272,7 +272,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e2.getMessage.contains("not in the corpus"), e2.getMessage)
     // and the memo keys on the corpus dir: a correct serve against
     // `base` right after the failed ones must reload, not reuse
-    Hnsw.invalidateServedMemo()
+    Hnsw.servedMemo.clear()
     assert(Hnsw.annHnswServe(spark, base, idx, nQueries = 3, k = 2)
       .count() > 0)
     intercept[IllegalArgumentException] { // same index, wrong dir again
@@ -293,7 +293,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = forgeCorpus(col("vec_id") < 100)
     val idx = java.nio.file.Files.createTempDirectory("hnsw-append").toString
     Hnsw.writeHnswIndex(spark, base, idx)
-    Hnsw.invalidateServedMemo()
+    Hnsw.servedMemo.clear()
     // pre-populate the serve memo with the PRE-append graph
     assert(Hnsw.annHnswServe(spark, base, idx, nQueries = 3, k = 2).count() > 0)
     val grown = forgeCorpus(col("vec_id") < 130)
@@ -306,9 +306,9 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the exhaustive shortlist + exact rescore erase that)
     val served = rows(Hnsw.annHnswServe(spark, grown, idx, efSearch = 256))
     assert(served == rows(Similarity.annBruteForce(spark, grown)))
-    // the append dropped this index's memo entries itself: serving the
-    // OLD corpus now refuses (the index has ids base never had) with
-    // no manual invalidation in between
+    // the append re-stamped graph/, so the memo reloads by itself:
+    // serving the OLD corpus now refuses (the index has ids base never
+    // had) with no manual invalidation in between
     intercept[IllegalArgumentException] {
       Hnsw.annHnswServe(spark, base, idx).collect()
     }
@@ -505,7 +505,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = forgeCorpus(col("vec_id") < 100)
     val idx = java.nio.file.Files.createTempDirectory("hnsw-seg").toString
     Hnsw.writeHnswIndexSharded(spark, base, idx, nShards = 4)
-    Hnsw.ShardGraphCache.invalidate(); Hnsw.invalidateDriftChecks()
+    Hnsw.ShardGraphCache.invalidate(); Hnsw.shardedDriftChecked.clear()
     Hnsw.annHnswServeSharded(spark, base, idx).count() // residency warm
     val loads0 = Hnsw.ShardGraphCache.loadCount
     def shardDirs() = new java.io.File(s"$idx/graph").listFiles()
@@ -563,7 +563,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(debris.getPath, "_temporary"),
       Array.empty[Byte])
-    Hnsw.ShardGraphCache.invalidate(); Hnsw.invalidateDriftChecks()
+    Hnsw.ShardGraphCache.invalidate(); Hnsw.shardedDriftChecked.clear()
     assert(rows(Hnsw.annHnswServeSharded(spark, base, idx, efSearch = 256)) ==
       rows(Similarity.annBruteForce(spark, base)),
       "serve must skip the empty partition, not refuse on it")
@@ -584,7 +584,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = forgeCorpus(col("vec_id") < 100)
     val idx = java.nio.file.Files.createTempDirectory("hnsw-driftstamp").toString
     Hnsw.writeHnswIndexSharded(spark, dir, idx, nShards = 4)
-    Hnsw.invalidateDriftChecks()
+    Hnsw.shardedDriftChecked.clear()
     assert(rows(Hnsw.annHnswServeSharded(spark, dir, idx, efSearch = 256)) ==
       rows(Similarity.annBruteForce(spark, dir))) // drift check cached
     // regenerate the corpus under the SAME path with a smaller id set:
@@ -834,7 +834,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val emb = graft.Tables.embeddings(spark, corpus)
     val idx = java.nio.file.Files.createTempDirectory("hnsw-bloom").toString
     Hnsw.ensureShardedMeta(idx, 8, 96, 4)
-    Hnsw.IdBloom.invalidateBloomMemo()
+    Hnsw.IdBloom.memo.clear()
     val rb0 = Hnsw.IdBloom.rebuildCount
     val fb0 = Hnsw.IdBloom.fallbackCount
     // three all-new batches: the steady state — the diff must come
@@ -860,12 +860,12 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
       emb.filter(col("vec_id") >= 110 && col("vec_id") < 130)
         .unionAll(emb.filter(col("vec_id") === 125L))) == 10L)
     val served = forgeCorpus(col("vec_id") < 130)
-    Hnsw.ShardGraphCache.invalidate(); Hnsw.invalidateDriftChecks()
+    Hnsw.ShardGraphCache.invalidate(); Hnsw.shardedDriftChecked.clear()
     assert(rows(Hnsw.annHnswServeSharded(spark, served, idx, efSearch = 256))
       == rows(Similarity.annBruteForce(spark, served)))
     // session restart (memo cold): the SIDECAR answers — no rebuild —
     // and idempotence still holds
-    Hnsw.IdBloom.invalidateBloomMemo()
+    Hnsw.IdBloom.memo.clear()
     val rb1 = Hnsw.IdBloom.rebuildCount
     assert(Hnsw.appendHnswIndexSegment(spark, idx,
       emb.filter(col("vec_id") < 130)) == 0L)
@@ -874,7 +874,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     // an out-of-band id-set change (routed append with no valid bloom
     // present) DROPS the sidecar; the next segment append rebuilds it
     // from one scan and stays idempotent
-    Hnsw.IdBloom.invalidateBloomMemo()
+    Hnsw.IdBloom.memo.clear()
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(s"$idx/_idbloom"))
     val grown = forgeCorpus(col("vec_id") < 135)
@@ -911,7 +911,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val prevCap = sys.props.get("graft.hnsw.bloomCapacity")
     try {
       sys.props("graft.hnsw.bloomCapacity") = "1234"
-      Hnsw.IdBloom.invalidateBloomMemo() // force the sidecar read path
+      Hnsw.IdBloom.memo.clear() // force the sidecar read path
       val grown3 = forgeCorpus(col("vec_id") < 150)
       assert(Hnsw.appendHnswIndexSegment(spark, idx,
         graft.Tables.embeddings(spark, grown3)
@@ -933,7 +933,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val corpus = forgeCorpus(col("vec_id") < 100)
     val idx = java.nio.file.Files.createTempDirectory("hnsw-driftleak").toString
     Hnsw.writeHnswIndexSharded(spark, corpus, idx, nShards = 4)
-    Hnsw.invalidateDriftChecks()
+    Hnsw.shardedDriftChecked.clear()
     // the designed steady state: maintain batch → serve, repeated —
     // every batch mints a NEW index stamp (and the in-place corpus
     // growth a new corpus stamp), so without the purge each cycle
@@ -947,8 +947,23 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
           .filter(col("vec_id") >= 100 + 10 * i))
       Hnsw.annHnswServeSharded(spark, corpus, idx, efSearch = 256).count()
     }
-    assert(Hnsw.driftCheckedSize == 1,
-      s"stale drift entries must purge, got ${Hnsw.driftCheckedSize}")
+    assert(Hnsw.shardedDriftChecked.size == 1,
+      s"stale drift entries must purge, got ${Hnsw.shardedDriftChecked.size}")
+  }
+
+  test("a refused drift check is not memoized: it refuses again") {
+    import org.apache.spark.sql.functions.col
+    val idx = java.nio.file.Files.createTempDirectory("hnsw-driftrefuse").toString
+    Hnsw.writeHnswIndexSharded(spark, forgeCorpus(col("vec_id") < 100), idx, nShards = 2)
+    Hnsw.shardedDriftChecked.clear()
+    val grown = forgeCorpus(col("vec_id") < 120)
+    (1 to 2).foreach { _ =>
+      val e = intercept[IllegalArgumentException] {
+        Hnsw.annHnswServeSharded(spark, grown, idx).collect()
+      }
+      assert(e.getMessage.contains("never saw"), e.getMessage)
+      assert(Hnsw.shardedDriftChecked.size == 0)
+    }
   }
 
   test("a crash between reshard's delete and rename auto-recovers: the " +
@@ -968,7 +983,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(new java.io.File(s"$idx/.staging-reshard/_SUCCESS").exists())
     }
     forgeCrash()
-    Hnsw.ShardGraphCache.invalidate(); Hnsw.invalidateDriftChecks()
+    Hnsw.ShardGraphCache.invalidate(); Hnsw.shardedDriftChecked.clear()
     assert(rows(Hnsw.annHnswServeSharded(spark, corpus, idx, efSearch = 256))
       == exact, "serve must auto-recover the stranded staging")
     assert(new java.io.File(s"$idx/graph/shard=0").isDirectory &&
@@ -1025,7 +1040,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$idx/.trash-reshard/shard=0/part-0"),
       Array[Byte](1)) // stale bytes — must be dropped, never read
-    Hnsw.ShardGraphCache.invalidate(); Hnsw.invalidateDriftChecks()
+    Hnsw.ShardGraphCache.invalidate(); Hnsw.shardedDriftChecked.clear()
     assert(rows(Hnsw.annHnswServeSharded(spark, corpus, idx, efSearch = 256))
       == rows(Similarity.annBruteForce(spark, corpus)),
       "recovery must serve from the authoritative staged copy")
@@ -1070,7 +1085,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
     val prevCap = sys.props.get("graft.hnsw.bloomCapacity")
     try {
       sys.props("graft.hnsw.bloomCapacity") = "20" // tiny -D floor
-      Hnsw.IdBloom.invalidateBloomMemo()
+      Hnsw.IdBloom.memo.clear()
       Hnsw.ensureShardedMeta(idx, 8, 96, 4)
       // creation at cap=20, then 200 ids folded in → the filter runs
       // far past its design fpp: a fresh 50-id batch gets flagged
@@ -1091,7 +1106,7 @@ class HnswSpec extends AnyFunSuite with BeforeAndAfterAll {
       // operator response: force a rebuild (drop the sidecar) — the
       // rebuild scans the ids anyway, so it sizes the new filter from
       // the OBSERVED count (2x slack), not the stale -D floor
-      Hnsw.IdBloom.invalidateBloomMemo()
+      Hnsw.IdBloom.memo.clear()
       java.nio.file.Files.deleteIfExists(
         java.nio.file.Paths.get(s"$idx/_idbloom"))
       val rb0 = Hnsw.IdBloom.rebuildCount

@@ -403,19 +403,35 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("cluster-label memo: hit on second call, bypassed when distributed path forced") {
     import spark.implicits._
-    Dedup.invalidateClusterMemo()
-    assert(Dedup.clusterMemoSize === 0)
+    Dedup.clusterMemo.clear()
+    assert(Dedup.clusterMemo.size === 0)
     val first = Dedup.nearDupClusters(spark, sf).as[(Long, Long)].collect().toSet
-    assert(Dedup.clusterMemoSize === 1, "fast path must memoize its labels")
+    assert(Dedup.clusterMemo.size === 1, "fast path must memoize its labels")
     val second = Dedup.nearDupClusters(spark, sf).as[(Long, Long)].collect().toSet
     assert(second === first, "memo hit must return identical labels")
-    assert(Dedup.clusterMemoSize === 1)
+    assert(Dedup.clusterMemo.size === 1)
     // forcing the distributed path bypasses the memo and still agrees
     val forced = Dedup.nearDupClusters(spark, sf, driverMaxEdges = 0)
       .as[(Long, Long)].collect().toSet
     assert(forced === first)
-    Dedup.invalidateClusterMemo()
-    assert(Dedup.clusterMemoSize === 0)
+    Dedup.clusterMemo.clear()
+    assert(Dedup.clusterMemo.size === 0)
+  }
+
+  test("cluster-label memo: d7 and v14 share componentsOf over one dir without evicting each other") {
+    Dedup.clusterMemo.clear()
+    val app = spark.sparkContext.applicationId
+    val d7 = (app, sf, "ngram", Dedup.ngramMinJ) ->
+      graft.sources.ContentStamp.of(spark, s"$sf/documents.parquet")
+    val v14 = (app, sf, "cos", 0.4) -> graft.sources.ContentStamp.ofCorpus(spark, sf)
+    def bothLive(): Boolean = Dedup.clusterMemo.size == 2 &&
+      Seq(d7, v14).forall { case (k, st) => Dedup.clusterMemo.get(k, st).isDefined }
+    val labels = Dedup.nearDupClusters(spark, sf).collect().toSet
+    Similarity.embeddingClusters(spark, sf).collect()
+    assert(bothLive())
+    assert(Dedup.nearDupClusters(spark, sf).collect().toSet === labels)
+    Similarity.embeddingClusters(spark, sf).collect()
+    assert(bothLive())
   }
 
   test("search page: pagination stable, ES-style highlight wraps every match") {
@@ -447,7 +463,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .as[(Long, Int, Long, Double)].collect().sortBy(r => (r._1, r._2))
     // invalidate the model memo so the second run RETRAINS — this spec
     // pins retrain-determinism, not memo-hit equality
-    Similarity.invalidateModelMemo()
+    graft.sources.ContentStamp.Memo.invalidateAll()
     val b = Similarity.annIvf(spark, sf, trainFraction = 0.5)
       .as[(Long, Int, Long, Double)].collect().sortBy(r => (r._1, r._2))
     assert(a.nonEmpty)
@@ -506,7 +522,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val a = Similarity.annIvfPq(spark, sf)
       .as[(Long, Int, Long, Double)].collect().sortBy(r => (r._1, r._2))
     // retrain-determinism, not memo-hit equality (the annIvf pattern)
-    Similarity.invalidateModelMemo()
+    graft.sources.ContentStamp.Memo.invalidateAll()
     val b = Similarity.annIvfPq(spark, sf)
       .as[(Long, Int, Long, Double)].collect().sortBy(r => (r._1, r._2))
     assert(a.nonEmpty)
@@ -1212,13 +1228,19 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val byId = out.map { case (id, cl, _) => (id, cl, emb(id)) }
     assert(out.toSet === semDedupReference(byId, 0.4))
     // deterministic across invocations (memo hit AND cold retrain)
-    Similarity.invalidateModelMemo()
+    graft.sources.ContentStamp.Memo.invalidateAll()
     val again = Similarity.semDedupTrained(spark, sf).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getBoolean(2)))
     assert(again.sortBy(_._1).toSeq === out.sortBy(_._1).toSeq)
   }
 
   test("sourceOverlap: equals the driver-side exact pair Jaccard, symmetric and bounded") {
+    // the corpus plus one NULL-source copy of a real doc: a null source
+    // is no source — it forms no pair and is not counted as a source
+    val dir = java.nio.file.Files.createTempDirectory("graft-srcoverlap").toString
+    val docs = Tables.documents(spark, sf)
+    docs.union(docs.limit(1).withColumn("source", lit(null).cast("string")))
+      .write.parquet(s"$dir/documents.parquet")
     val grams = Tables.documents(spark, sf)
       .select(col("source"), col("text")).collect()
       .map(r => r.getString(0) -> r.getString(1))
@@ -1237,13 +1259,15 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     } yield (a, b, ga.size.toLong, gb.size.toLong, inter.toLong,
       BigDecimal(inter.toDouble / (ga.size + gb.size - inter))
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSet
-    val got = Dedup.sourceOverlap(spark, sf).collect()
+    val got = Dedup.sourceOverlap(spark, dir).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getDouble(5))).toSet
     assert(got === expected)
     assert(got.nonEmpty, "synthetic sources share vocabulary — overlap must exist")
     // unordered pairs appear exactly once, a < b
     assert(got.forall { case (a, b, _, _, _, _) => a < b })
+    assert(Dedup.sourceOverlap(spark, dir, maxSources = grams.size).count() ===
+      expected.size.toLong, "the null source must not count against maxSources")
   }
 
   test("sourceOverlap: refuses loudly past maxSources, pointing at the sketch path") {
@@ -1846,6 +1870,39 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the synthetic loop doc must actually exercise the dup branch
     val loop = got.find(_._1 == 1L).get
     assert(loop._5 > 0.5 && loop._6 > 0.5, "doc 1 duplicated 5/8-grams cover most chars")
+  }
+
+  test("t10: NULL, empty and whitespace-only text is dropped as too_short") {
+    import spark.implicits._
+    val docs = Seq[(Long, String)]((1L, null), (2L, ""), (3L, " \t  "),
+      (4L, (1 to 20).map(i => s"w$i").mkString(" "))).toDF("doc_id", "text")
+    val got = TextOps.filterDecisionOn(docs)
+      .select("doc_id", "n_tokens", "drop_reason", "keep")
+      .as[(Long, Option[Int], Option[String], Boolean)].collect().sortBy(_._1)
+    assert(got.take(3).forall(r => r._3.contains("too_short") && !r._4),
+      got.toSeq)
+    assert(got(0)._2.contains(0), "NULL text counts zero tokens")
+    assert(got(3)._4, "20 distinct non-stopword tokens pass every rule")
+  }
+
+  test("t27/t32 models retrain when documents.parquet is rewritten in place") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-textmodels").toString
+    def write(texts: String*): Unit =
+      texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def models() = (
+      TextOps.bpeMerges(spark, dir, nMerges = 5).collect().toSeq,
+      TextOps.unigramPieces(spark, dir, vocabSize = 20).collect().toSeq)
+    write("abab abab cdcd", "abab cdcd cdcd")
+    val before = models()
+    write("xyzxyz qrqr", "xyzxyz qrqr qrqr")
+    val after = models()
+    val stale = Seq("t27 BPE" -> (after._1 == before._1),
+      "t32 unigram" -> (after._2 == before._2)).collect { case (m, true) => m }
+    assert(stale.isEmpty, s"served the pre-rewrite model: ${stale.mkString(", ")}")
+    graft.sources.ContentStamp.Memo.invalidateAll()
+    assert(models() === after, "the retrained models equal a cold train")
   }
 
   test("t32/t33 unigram: model invariants, learned compression, and corpus round-trip") {

@@ -54,7 +54,7 @@ class ResidualPqSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("clustered corpus: residual codes rank better — higher recall at the same tight dial") {
     val dir = clusteredDir(n = 3000, dim = 8, g = 6)
-    Similarity.invalidateModelMemo()
+    graft.sources.ContentStamp.Memo.invalidateAll()
     try {
       val exact = pairs(Similarity.annBruteForce(spark, dir, nQueries = 30, k = 5))
       // tight dial: nprobe covers the space, rerank barely above k — the
@@ -71,7 +71,7 @@ class ResidualPqSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(res > raw,
         f"residual PQ should out-rank raw PQ on clustered data (raw $raw%.3f, residual $res%.3f)")
       assert(res > 0.9, f"residual PQ recall too low on clustered data: $res%.3f")
-    } finally Similarity.invalidateModelMemo()
+    } finally graft.sources.ContentStamp.Memo.invalidateAll()
   }
 
   test("generous dial: residual path equals the exact sweep (rescore is exact)") {

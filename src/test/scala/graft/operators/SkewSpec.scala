@@ -112,7 +112,7 @@ class SkewSpec extends AnyFunSuite with BeforeAndAfterAll {
           .as("embedding"))
       spread.unionByName(hot).write.mode("overwrite")
         .parquet(s"$skewDir/embeddings.parquet")
-      Similarity.invalidateModelMemo()
+      graft.sources.ContentStamp.Memo.invalidateAll()
       val graph = Similarity.knnGraph(spark, skewDir,
         k = 3, nClusters = 8, iters = 1, nprobe = 2, m = 4, nCodes = 8, rerank = 8)
       // collect THIS DataFrame so its adaptive plan is final when inspected
@@ -125,7 +125,7 @@ class SkewSpec extends AnyFunSuite with BeforeAndAfterAll {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)
       }
-      Similarity.invalidateModelMemo()
+      graft.sources.ContentStamp.Memo.invalidateAll()
     }
   }
 }

@@ -65,12 +65,12 @@ class Sq8AnnSpec extends AnyFunSuite with BeforeAndAfterAll {
           x => (x.cast("double") * (pmod(col("vec_id"), lit(7)) + 1)).cast("float"))
           .as("embedding"))
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    Similarity.invalidateModelMemo()
+    graft.sources.ContentStamp.Memo.invalidateAll()
     try {
       val scaled = pairs(Similarity.annIvfSq8(spark, dir, nprobe = 16, rerank = 64))
-      Similarity.invalidateModelMemo()
+      graft.sources.ContentStamp.Memo.invalidateAll()
       val base = pairs(Similarity.annIvfSq8(spark, sf, nprobe = 16, rerank = 64))
       assert(scaled === base)
-    } finally Similarity.invalidateModelMemo()
+    } finally graft.sources.ContentStamp.Memo.invalidateAll()
   }
 }

@@ -62,7 +62,7 @@ object DriveAnnScale {
       val dir = java.nio.file.Files.createTempDirectory(s"graft-annscale-$n").toString
       corpus(n, nClusters).write.mode("overwrite")
         .parquet(s"$dir/embeddings.parquet")
-      Similarity.invalidateModelMemo()
+      graft.sources.ContentStamp.Memo.invalidateAll()
       // codes-only index (rescore joins the corpus relation) AND the
       // vector-carrying index (rescore reads the probed cells' own
       // files) — the serve gap between them IS the hidden linear read

@@ -50,7 +50,7 @@ object DriveFamilies {
     for ((regime, sep) <- Seq("strong-sep(±200)" -> 1.0, "weak-sep(±20)" -> 0.1)) {
       val dir = java.nio.file.Files.createTempDirectory("graft-families").toString
       corpus(sep).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      Similarity.invalidateModelMemo()
+      graft.sources.ContentStamp.Memo.invalidateAll()
       println(s"== four-family trade [$regime]: n=$n g=$g dim=$dim nprobe=$nprobe/$g queries=$nQ ==")
       val t0 = System.nanoTime()
       val exact = pairs(Similarity.annBruteForce(spark, dir, nQueries = nQ, k = k))

@@ -30,10 +30,7 @@ object ProfileR18 {
     def sec(name: String)(body: => Unit): Unit = if (want(name)) {
       println(s"[profile] === $name ===")
       spark.catalog.clearCache()
-      Dedup.invalidateClusterMemo()
-      Similarity.invalidateModelMemo()
-      TextOps.invalidateBpeMemo()
-      TextOps.invalidateUnigramMemo()
+      graft.sources.ContentStamp.Memo.invalidateAll()
       body
       spark.catalog.clearCache()
     }
@@ -97,7 +94,7 @@ object ProfileR18 {
     }
 
     sec("v13") {
-      Similarity.invalidateModelMemo()
+      graft.sources.ContentStamp.Memo.invalidateAll()
       t("exec v13 (cold models)")(Similarity.knnGraph(spark, dir).count())
       t("exec v13 (warm models)")(Similarity.knnGraph(spark, dir).count())
     }

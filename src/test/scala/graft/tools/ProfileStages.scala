@@ -51,11 +51,7 @@ object ProfileStages {
     try graft.SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").count()
     catch { case _: Throwable => () }
     spark.catalog.clearCache()
-    graft.operators.Dedup.invalidateClusterMemo()
-    graft.operators.Similarity.invalidateModelMemo()
-    graft.operators.TextOps.invalidateBpeMemo()
-    graft.operators.TextOps.invalidateUnigramMemo()
-    graft.operators.Hnsw.invalidateGraphMemo()
+    graft.sources.ContentStamp.Memo.invalidateAll()
 
     (1 to reps).foreach { rep =>
       stages.clear()
@@ -82,11 +78,7 @@ object ProfileStages {
           f"in ${s.input / 1e6}%8.1f MB shR ${s.shRead / 1e6}%7.1f shW ${s.shWrite / 1e6}%7.1f  ${s.name}")
       }
       spark.catalog.clearCache()
-      graft.operators.Dedup.invalidateClusterMemo()
-      graft.operators.Similarity.invalidateModelMemo()
-      graft.operators.TextOps.invalidateBpeMemo()
-      graft.operators.TextOps.invalidateUnigramMemo()
-      graft.operators.Hnsw.invalidateGraphMemo()
+      graft.sources.ContentStamp.Memo.invalidateAll()
     }
     spark.stop()
   }

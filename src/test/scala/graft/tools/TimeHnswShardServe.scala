@@ -55,7 +55,7 @@ object TimeHnswShardServe {
       Hnsw.annHnswServeSharded(spark, dir, idx, nQueries = nQ)
 
     // cold: residency + drift memo emptied
-    Hnsw.ShardGraphCache.invalidate(); Hnsw.invalidateDriftChecks()
+    Hnsw.ShardGraphCache.invalidate(); Hnsw.shardedDriftChecked.clear()
     time("serve10 COLD (load+walk+rescore)", reps = 1) { serve(10).count() }
     time("serve10 resident (full)") { serve(10).count() }
     time("serve100 resident (full)") { serve(100).count() }
