@@ -1,6 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Benchmark main (driver contract): times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -188,6 +191,451 @@ object Bench {
       operators.TextOps.cmsEstimateFrom(s,
         operators.TextOps.maintainedCms(s, cmsStoreFor(s, d)._2),
         cmsProbes, depth = 4, width = 512)),
+  )
+
+  /** One stream section's guarded result: the best attempt's rate,
+    * whether the attempts still disagree, and the last error when every
+    * attempt failed. */
+  private[graft] final case class Guarded(rate: Double, suspect: Boolean,
+                                          failure: Option[Throwable])
+
+  /** STREAM CONTENTION GUARD (the query machinery, rate-shaped): two
+    * attempts per section, best (max) rate reported — each attempt gets
+    * a FRESH checkpoint so no state is reused. If the top two successful
+    * rates disagree by >3×, a third attempt decides; still >3× → the
+    * section is suspect (r5's dau-HDFS 3× drop was unjudgeable because
+    * the rates were single-guarded). A crash counts as -1 for that
+    * attempt only. The top two rates' ratio is [[passSpread]] over
+    * their reciprocals (the times per row). */
+  private[graft] def guardAttempts(attempt: () => Double): Guarded = {
+    var lastErr: Option[Throwable] = None
+    def one(): Double =
+      try attempt() catch { case e: Throwable => lastErr = Some(e); -1.0 }
+    def spread(rs: Seq[Double]): Double = passSpread(rs.filter(_ > 0).map(1 / _))
+    var rs = Seq(one(), one())
+    if (spread(rs) > 3.0) rs = rs :+ one()
+    val best = rs.max
+    Guarded(best, spread(rs) > 3.0, if (best <= 0) lastErr else None)
+  }
+
+  /** What a stream section's untimed setup sees: the session, the
+    * corpus dir, and the two ways a section feeds a file stream. */
+  private[graft] final class StreamCtx(val spark: SparkSession, val sfDir: String) {
+    /** `<sfDir>/<table>.parquet` as a file stream: file-stream sources
+      * need a directory, so the single file is exposed through a fresh
+      * temp-dir symlink. */
+    def streamOf(table: String): DataFrame = {
+      val schema = spark.read.parquet(s"$sfDir/$table.parquet").schema
+      val d = Files.createTempDirectory(s"graft-bench-$table")
+      Files.createSymbolicLink(d.resolve(s"$table.parquet"),
+        Paths.get(s"$sfDir/$table.parquet"))
+      spark.readStream.schema(schema).parquet(d.toString)
+    }
+
+    /** `df` written once (a build-once fixture, untimed) as one parquet
+      * file per partition, returned at rest and as a stream taking one
+      * file per trigger: N partitions feed N micro-batches. */
+    def fileFeed(key: String)(df: => DataFrame): (DataFrame, DataFrame) = {
+      val path = fixture(s"$key|$sfDir") {
+        val d = Files.createTempDirectory(s"graft-bench-$key").toString
+        df.write.mode("overwrite").parquet(d)
+        d
+      }
+      val atRest = spark.read.parquet(path)
+      (atRest, spark.readStream.schema(atRest.schema)
+        .option("maxFilesPerTrigger", "1").parquet(path))
+    }
+  }
+
+  /** One attempt's scratch: fresh dirs by tag (no checkpoint, index or
+    * output is reused between attempts), and a sink that only counts. */
+  private[graft] final class Attempt(spark: SparkSession, section: String) {
+    private val dirs = scala.collection.mutable.Map.empty[String, String]
+    def dir(tag: String): String = dirs.getOrElseUpdate(tag,
+      Files.createTempDirectory(s"graft-bench-$section-$tag").toString)
+    def ckpt: String = dir("ckpt")
+
+    private lazy val rows = spark.sparkContext.longAccumulator(s"graft-bench-$section")
+    /** A foreachBatch sink that counts the rows `out` emits. */
+    def countRows(out: DataFrame, mode: String = "append"): StreamingQuery =
+      out.writeStream.outputMode(mode)
+        .foreachBatch((b: DataFrame, _: Long) => rows.add(b.count()))
+        .option("checkpointLocation", ckpt)
+        .start()
+    def counted: Long = rows.value
+  }
+
+  /** A section's untimed setup result: the input rows one attempt feeds,
+    * the attempt's output check, and `run`, which starts the attempt's
+    * queries and returns once they have drained and stopped. */
+  private[graft] final class Feed(val inputRows: Long, val ok: Attempt => Boolean,
+                                  val run: Attempt => Unit)
+
+  private[graft] object Feed {
+    /** The common shape: one query, drained, then stopped inside the
+      * timed window; stopped again on failure, so it cannot keep running
+      * into later attempts. */
+    def apply(inputRows: Long, ok: Attempt => Boolean)(
+        start: Attempt => StreamingQuery): Feed =
+      new Feed(inputRows, ok, { a =>
+        val q = start(a)
+        try { q.processAllAvailable(); q.stop() }
+        finally try q.stop() catch { case _: Throwable => () }
+      })
+  }
+
+  /** One stream section: its JSON name, the state shuffle partitions
+    * and store its queries run on, and its untimed setup. */
+  private[graft] final case class StreamSection(name: String, partitions: Int = 8,
+                                                rocks: Boolean = false)(
+      val setup: StreamCtx => Feed)
+
+  // INPUT SIZING (round 6): the sf0.1 events table is ~100k rows — one
+  // micro-batch whose wall is dominated by fixed startup (plan compile
+  // + first state-store open, ~1-3 s), so the reported "rate" swung 4×
+  // between idle runs with IDENTICAL CPU calibrations (r5's dau-HDFS
+  // 29.7k and an r6 repro both trace to this, not to contention or a
+  // store regression: fsync latency measured flat, and warm walls
+  // converge once input is ×10). Each single-batch section therefore
+  // replicates its input with an EXPANDED key space (real state growth,
+  // not re-dedup of the same keys) until sustained throughput dominates
+  // the fixed cost.
+  private def dau(c: StreamCtx): Feed = {
+    import c._
+    val rep = 10
+    val ev = Tables.normalizeEventTs(streamOf("events"))
+      .selectExpr("*", s"explode(sequence(0, ${rep - 1})) as r")
+      .selectExpr("concat(cast(user_id as string), '#', r) as mid", "ts")
+    Feed(Tables.events(spark, sfDir).count() * rep, _ => true) { a =>
+      streaming.Pipelines.dauFirstVisits(ev)
+        .writeStream.format("noop")
+        .option("checkpointLocation", a.ckpt)
+        .start()
+    }
+  }
+
+  /** Token rows of the sf documents — the input the text sections
+    * price their rates over. */
+  private def tokenRows(c: StreamCtx): Long = {
+    import org.apache.spark.sql.functions.{col, explode}
+    c.spark.read.parquet(s"${c.sfDir}/documents.parquet")
+      .select(explode(operators.TextOps.tokens(col("text")))).count()
+  }
+
+  // the two streaming INTAKE loops — the library's flagship deployment
+  // shapes (r9 verdict Next #2, now round-over-round comparable on the
+  // artifact). Rate over input docs; fresh index/decisions/checkpoint
+  // per attempt (a reused index would change the work); the fixture is
+  // shared, built once untimed. Guard: one decision row per doc, or -1.
+  // For curate_intake the NB model + eval-gram builds land INSIDE the
+  // timed window (they amortize over a real stream's lifetime, but
+  // belong in an honest single-feed number).
+  private def intake(fix: StreamCtx => (DataFrame, DataFrame))(
+      start: (StreamCtx, DataFrame, Attempt) => StreamingQuery)(c: StreamCtx): Feed = {
+    val (docs, feed) = fix(c)
+    val nDocs = docs.count()
+    Feed(nDocs, a => c.spark.read.parquet(a.dir("out")).count() == nDocs)(
+      start(c, feed, _))
+  }
+  // the documents table split into 4 files and fed as 4 micro-batches:
+  // each batch probes the index maintained by the PREVIOUS batches, so
+  // the measured path is the real loop (probe + intra-batch first-wins +
+  // two exactly-once sinks), not a single-batch special case
+  private def intakeDocs(c: StreamCtx) = c.fileFeed("intakefix") {
+    import org.apache.spark.sql.functions.col
+    c.spark.read.parquet(s"${c.sfDir}/documents.parquet")
+      .select(col("doc_id"), col("text")).repartition(4)
+  }
+  // ONE 20 k-doc trigger over the SyntheticDocs corpus (distinct
+  // ~40-token docs, ~2% near-dups — replicating the 5 000 testdata docs
+  // would drown the dup path with exact copies)
+  private def intakeDocs20k(c: StreamCtx) =
+    c.fileFeed("intake20k")(sources.SyntheticDocs.corpus(c.spark, 20000L).coalesce(1))
+  private def dedupIntake(c: StreamCtx, docs: DataFrame, a: Attempt) =
+    streaming.Runner.dedupIntakeQuery(c.spark, a.dir("idx"), docs, a.dir("out"), a.ckpt)
+  private def curateIntake(c: StreamCtx, docs: DataFrame, a: Attempt) =
+    streaming.Runner.curateIntakeQuery(c.spark, c.sfDir, a.dir("idx"), docs,
+      a.dir("out"), a.ckpt)
+
+  // streaming COMPONENTS maintenance (round 17, the r16 verdict's Next
+  // #3): the sf corpus's bigram edge feed in 4 micro-batches through
+  // componentsMaintainQuery — the pageRank loop's store and fold with
+  // the recompute swapped for min-label components. Like the pagerank
+  // section this prices the LOOP (edge write + fold + per-trigger
+  // recompute floor); the recompute is the q37 batch operator, already
+  // timed on the gate. Rate over input edge rows. Guard: every node of
+  // the fed graph must come out labeled. Both cadences share one
+  // fixture and one node count.
+  private def components(cadence: Int)(c: StreamCtx): Feed = {
+    import c._
+    import org.apache.spark.sql.functions.col
+    val (edges, feed) = fileFeed("ccfix")(
+      operators.GraphOps.bigramEdges(spark, sfDir).repartition(4))
+    val (nEdges, nNodes) = fixture(s"ccsize|$sfDir") {
+      (edges.count(), edges.select(col("src").as("n"))
+        .union(edges.select(col("dst"))).distinct().count())
+    }
+    Feed(nEdges, a => spark.read.parquet(s"${a.dir("graph")}/labels").count() == nNodes) { a =>
+      streaming.Runner.componentsMaintainQuery(spark, a.dir("graph"), feed, a.ckpt,
+        recomputeEveryBatches = cadence)
+    }
+  }
+
+  // streaming HNSW index maintenance (round 13) through
+  // hnswMaintainQuery's LSM-segment default, a fresh index per attempt.
+  // Guard: every fed vector indexed exactly once (level-0 count).
+  private def hnswMaintain(fix: StreamCtx => (DataFrame, DataFrame))(c: StreamCtx): Feed = {
+    import org.apache.spark.sql.functions.col
+    val (vecs, feed) = fix(c)
+    val nVecs = vecs.count()
+    Feed(nVecs, a => c.spark.read.parquet(s"${a.dir("idx")}/graph")
+        .filter(col("level") === 0).count() == nVecs) { a =>
+      streaming.Runner.hnswMaintainQuery(c.spark, a.dir("idx"), feed, a.ckpt)
+    }
+  }
+
+  /** The stream sections in run order. `main` runs every row through
+    * one skeleton: calibration bracket, attempt guard, fresh scratch
+    * dirs, timed drain, and the row's output check. Each row's
+    * `<name>_rows_per_sec` and `<name>_rows_per_calib` JSON fields come
+    * from this table. */
+  private[graft] val streamSections: Seq[StreamSection] = Seq(
+    // streaming throughput: the DAU pipeline through a REAL streaming
+    // query — file-stream source → watermark → state-store dedup → noop
+    // sink (a batch DataFrame would take Pipelines' non-streaming branch
+    // and skip the state store entirely). The reference's envelope is
+    // "fits a 5 s trigger on 4 cores" (BASELINE.md); rows/sec makes
+    // that comparable. Both state stores, so a store-side regression is
+    // visible.
+    StreamSection("stream_dau")(dau),
+    StreamSection("stream_dau_rocksdb", rocks = true)(dau),
+    // stream-stream interval join throughput (the reference's DWS core,
+    // J1/W1): lineitem+orders as two file streams through
+    // Pipelines.orderWideJoin. The corpus's synthetic ship/order dates
+    // are ±2400 days apart, so event time derives from the join key on
+    // both sides (same value → pairs land inside the 20 s skew window) —
+    // the state-store insert/range-probe/watermark path is exercised
+    // with the real 1:N key distribution; only the timestamps are
+    // manufactured. Rows/sec over total input rows; a zero-match run
+    // reports -1 instead of a rate.
+    StreamSection("stream_join", partitions = 16) { c =>
+      import c._
+      import org.apache.spark.sql.functions._
+      import spark.implicits._
+      val nIn = spark.read.parquet(s"$sfDir/lineitem.parquet").count() +
+        spark.read.parquet(s"$sfDir/orders.parquet").count()
+      def keyTime(key: org.apache.spark.sql.Column) =
+        timestamp_seconds(lit(1700000000L) + key % 86400)
+      val oi = streamOf("orders").select(
+        col("o_orderkey").as("id"), col("o_custkey").as("user_id"),
+        lit(0L).as("province_id"), col("o_orderstatus").as("order_status"),
+        col("o_totalprice").as("final_total_amount"),
+        col("o_totalprice").as("original_total_amount"),
+        keyTime(col("o_orderkey")).as("create_time")).as[streaming.OrderInfo]
+      val od = streamOf("lineitem").select(
+        xxhash64(col("l_orderkey"), col("l_linenumber"), col("l_partkey")).as("id"),
+        col("l_orderkey").as("order_id"), col("l_partkey").as("sku_id"),
+        col("l_quantity").cast("long").as("sku_num"),
+        col("l_extendedprice").as("order_price"),
+        keyTime(col("l_orderkey")).as("create_time")).as[streaming.OrderDetail]
+      Feed(nIn, _.counted > 0) { a =>
+        a.countRows(streaming.Pipelines.orderWideJoin(oi, od).toDF())
+      }
+    },
+    // streaming CDC apply (q30's incremental twin): keyed
+    // flatMapGroupsWithState over the full events stream — the
+    // last-writer-wins state-update path with one state row per key.
+    // ×10 with an expanded user key space (the dau sizing rationale):
+    // 10× state rows, 10× update traffic through the keyed state path.
+    // Processed-rows guard: an empty/misconfigured stream must report
+    // the -1 sentinel, not an inflated n/sec over near-zero wall time.
+    StreamSection("stream_cdc_apply") { c =>
+      import c._
+      val rep = 10
+      val ev = Tables.normalizeEventTs(streamOf("events"))
+        .selectExpr("*", s"explode(sequence(0, ${rep - 1})) as r")
+        .selectExpr(
+          "event_id * 10 + r as event_id", "user_id * 10 + r as user_id",
+          "ts", "event_type", "value", "props")
+      Feed(Tables.events(spark, sfDir).count() * rep, _.counted > 0) { a =>
+        a.countRows(streaming.Pipelines.cdcApplyStream(ev).toDF())
+      }
+    },
+    // streaming heavy hitters on RocksDB: the windowed (window, gram)
+    // count state is exactly what grows at 1e9-key scale — documents
+    // exploded to a gram stream (the t18 vocabulary) with synthetic
+    // event time spreading docs across five 1-minute windows; rate over
+    // input GRAM rows. Output is the aggregate relation (the guard
+    // counts emitted windows — zero emissions = misconfigured
+    // watermark, -1). ×4 via a window shift (the dau sizing rationale):
+    // 4× gram rows AND 4× (window, gram) state keys — replicas land in
+    // disjoint 1-minute windows, so this grows state, not per-key counts.
+    StreamSection("stream_heavy_hitters_rocksdb", rocks = true) { c =>
+      import c._
+      import org.apache.spark.sql.functions._
+      val rep = 4
+      val grams = streamOf("documents")
+        .selectExpr("*", s"explode(sequence(0, ${rep - 1})) as r")
+        .select(
+          explode(operators.TextOps.tokens(col("text"))).as("gram"),
+          timestamp_seconds(lit(1700000000L) + col("doc_id") % 300 +
+            col("r") * 300).as("ts"))
+      Feed(tokenRows(c) * rep, _.counted > 0) { a =>
+        a.countRows(streaming.Pipelines.heavyHittersWindowed(grams))
+      }
+    },
+    // streaming CMS over the SAME ×4-replicated document feed the
+    // heavy-hitters section tokenizes: the CONSTANT-state twin — ≤
+    // depth×width counter rows total (HDFS store suffices) where the
+    // section above grows per-(window, gram) state; rate over the same
+    // input token rows, so the two sections price exact-vs-sketch
+    // lifetime counting on identical traffic. Update mode: a counter
+    // re-emits whenever it grows.
+    StreamSection("stream_cms_sketch") { c =>
+      import org.apache.spark.sql.functions.col
+      val rep = 4
+      val docs = c.streamOf("documents")
+        .selectExpr("text", s"explode(sequence(0, ${rep - 1})) as r")
+        .select(col("text"))
+      Feed(tokenRows(c) * rep, _.counted > 0) { a =>
+        a.countRows(streaming.Pipelines.cmsSketchStream(docs), mode = "update")
+      }
+    },
+    // the maintained-CMS deployment twin (round 16): the same sf
+    // documents through cmsMaintainQuery — per-batch sketch under
+    // batch_id partitions + the in-loop sum-fold — so the AT-REST
+    // frequency store's intake cost is round-over-round comparable
+    // alongside the in-session state twin above. Guard: maintained sums
+    // must be non-empty (a file-less store = a dead loop).
+    StreamSection("stream_cms_maintain") { c =>
+      import c._
+      import org.apache.spark.sql.functions.col
+      val docs = streamOf("documents").select(col("doc_id"), col("text"))
+      Feed(tokenRows(c),
+          a => operators.TextOps.maintainedCms(spark, a.dir("cms")).count() > 0) { a =>
+        streaming.Runner.cmsMaintainQuery(spark, a.dir("cms"), docs, a.ckpt,
+          compactEveryBatches = 3)
+      }
+    },
+    // the full LAYERED topology as three concurrent chained streaming
+    // queries (router → join+apportion → trademark agg over file edges —
+    // streaming/Topology.scala): end-to-end chain throughput over the
+    // CDC input lines, wall-clock from first stage start to final stage
+    // drained (startup + commit-log handshakes included — that IS the
+    // chain's latency). Output guard: zero brands in the final agg = a
+    // dead stage, -1.
+    StreamSection("stream_topology", partitions = 16) { c =>
+      import c._
+      import org.apache.spark.sql.functions.col
+      val fix = Files.createTempDirectory("graft-bench-topofix").toString
+      val n = streaming.Topology.writeCdcFixture(spark, sfDir, fix)
+      new Feed(n, a => !spark.read.parquet(s"${a.dir("topo")}/agg").isEmpty, { a =>
+        val root = a.dir("topo")
+        val chain = streaming.Topology.start(spark, fix,
+          s"$root/routed", s"$root/wide", s"$root/agg", s"$root/ckpt",
+          () => Tables.part(spark, sfDir).select(col("p_partkey"), col("p_brand")))
+        try chain.drain() finally chain.stopAll()
+      })
+    },
+    StreamSection("stream_dedup_intake")(intake(intakeDocs)(dedupIntake)),
+    StreamSection("stream_curate_intake")(intake(intakeDocs)(curateIntake)),
+    // amortized intake (r10 verdict Next #7): the 4-file sf feed above
+    // measures the ~15-job/trigger FIXED-COST FLOOR (1,250 docs per
+    // trigger at sf0.1); production batches are bigger, and docs/s
+    // rises with batch size until stage work dominates. Carry that
+    // amortized point on the artifact: ONE 20 k-doc trigger. Models and
+    // eval-dicts still build from sfDir inside the timed window, the
+    // honest single-feed convention shared with the sections above.
+    StreamSection("stream_curate_intake_20k")(intake(intakeDocs20k)(curateIntake)),
+    // amortized DEDUP intake (r14 verdict Next #4): the 4-file sf feed
+    // prices the loop's fixed trigger cost only (~318 docs/s); one
+    // 20 k-doc trigger carries the amortized sustained point, the
+    // curate_intake_20k precedent applied to the bare dedup loop (probe
+    // + first-wins + two exactly-once sinks, no NB/decontam stages).
+    StreamSection("stream_dedup_intake_20k")(intake(intakeDocs20k)(dedupIntake)),
+    // streaming graph maintenance (round 15): the sf events table fed in
+    // ONE trigger through transitionStream (keyed last-event state) +
+    // pageRankMaintainQuery (edge-count partitions + per-trigger
+    // 10-iteration rank recompute). Like hnsw_serve, the section prices
+    // the LOOP (state pass + edge write + recompute floor) — the
+    // recompute itself is the q36 batch operator, already timed on the
+    // gate; rate over input event rows. Guard: ranks must exist.
+    StreamSection("stream_pagerank_maintain") { c =>
+      import c._
+      import org.apache.spark.sql.functions.col
+      val feed = streamOf("events").select(col("user_id"),
+        col("ts").cast("timestamp").as("ts"), col("event_id"),
+        col("event_type"))
+      Feed(spark.read.parquet(s"$sfDir/events.parquet").count(),
+          a => spark.read.parquet(s"${a.dir("graph")}/ranks").count() > 0) { a =>
+        streaming.Runner.pageRankMaintainQuery(spark, a.dir("graph"),
+          streaming.Pipelines.transitionStream(feed).toDF(), a.ckpt)
+      }
+    },
+    StreamSection("stream_components_maintain")(components(cadence = 1)),
+    // the same loop at recompute cadence 3 (r17 verdict Next #1's
+    // done-criterion): 4 micro-batches recompute at batch ids 0 and 3
+    // instead of all four — the section quantifies the floor lift the
+    // web-scale dial buys (the final batch id falls ON the cadence, so
+    // the every-node-labeled guard still holds).
+    StreamSection("stream_components_maintain_c3")(components(cadence = 3)),
+    // the sf embedding table as 4 micro-batches. Like the intake floors,
+    // sf-scale input (2 k vectors at sf0.1) makes this the FIXED-COST
+    // FLOOR of the loop (checkpoint + per-batch left-anti + one small
+    // segment build/write per trigger), carried on the artifact so the
+    // maintain path is round-over-round comparable; SCALE.md's maintain
+    // A/B prices the sustained 1e6-base shape.
+    StreamSection("stream_hnsw_maintain")(hnswMaintain { c =>
+      import org.apache.spark.sql.functions.col
+      c.fileFeed("hnswfix")(c.spark.read.parquet(s"${c.sfDir}/embeddings.parquet")
+        .select(col("vec_id"), col("embedding")).repartition(4))
+    }),
+    // amortized HNSW maintain (r13 verdict Next #6): the sf-table feed
+    // above is the FIXED-COST FLOOR (~500 vectors/trigger at sf0.1);
+    // production maintain batches are bigger and the segment path's cost
+    // is BATCH-sized, so the floor under-reports sustained throughput
+    // exactly the way the intake floor did (the 20 k-doc precedent
+    // above). Carry the amortized point: ONE 20 k-vector trigger of
+    // clustered hash-jittered synthetic embeddings (the DriveHnswScale
+    // corpus shape — the sf table is too small for an amortized feed).
+    StreamSection("stream_hnsw_maintain_20k")(hnswMaintain { c =>
+      import org.apache.spark.sql.functions._
+      val dim = 64
+      c.fileFeed("hnsw20k")(c.spark.range(20000L).select(col("id").as("vec_id"),
+        transform(sequence(lit(0), lit(dim - 1)), i => {
+          val grp = pmod(col("id"), lit(64))
+          val center = pmod(grp * (i + 7) + grp * grp * 13, lit(401))
+            .cast("double") - 200.0
+          (center + pmod(xxhash64(col("id"), i), lit(160000)).cast("double")
+            / 10000.0 - 8.0).cast("float")
+        }).as("embedding")).coalesce(1))
+    }),
+    // ONLINE HNSW serving (r13 verdict Next #3): a (query_id, embedding)
+    // stream answered per micro-batch from the AT-REST sharded index
+    // (hnswServeQuery → annHnswServeShardedQueries through
+    // ShardGraphCache) — the deployment a vector store runs. Two
+    // ~50-query batches against the bench's prebuilt sf index; shard
+    // residency persists across attempts (the production steady state —
+    // the serving tier stays warm), so this section prices walks +
+    // rescore + the K5 sink, not reconstruction (v19_ann_hnsw_serve
+    // carries the cold tier). Rate over query rows. Guard: exactly k
+    // answers for every query across both batches.
+    StreamSection("stream_hnsw_serve") { c =>
+      import c._
+      import org.apache.spark.sql.functions.col
+      val idx = hnswShardedIndexFor(spark, sfDir)
+      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val nQ = math.min(100L, emb.count())
+      val (_, queries) = fileFeed("hnswsrvfix")(emb.filter(col("vec_id") < nQ)
+        .select(col("vec_id").as("query_id"), col("embedding")).repartition(2))
+      Feed(nQ, { a =>
+        val answers = spark.read.parquet(a.dir("out"))
+        answers.count() == nQ * 5 &&
+          answers.select(col("query_id")).distinct().count() == nQ
+      }) { a =>
+        streaming.Runner.hnswServeQuery(spark, idx, queries, a.dir("out"), a.ckpt)
+      }
+    },
   )
 
   def main(args: Array[String]): Unit = {
@@ -389,48 +837,6 @@ object Bench {
     }.sum * 1000) / 1000.0
     val failed = (results ++ prodResults).collect { case (k, v) if v < 0 => "\"" + k + "\"" }
       .mkString("[", ",", "]")
-    // file-stream sources need a directory; expose a single parquet file
-    // through a temp-dir symlink (shared by the streaming sections)
-    def streamOf(name: String) = {
-      val schema = spark.read.parquet(s"$sfDir/$name.parquet").schema
-      val d = java.nio.file.Files.createTempDirectory(s"graft-bench-$name")
-      java.nio.file.Files.createSymbolicLink(
-        d.resolve(s"$name.parquet"),
-        java.nio.file.Paths.get(s"$sfDir/$name.parquet"))
-      spark.readStream.schema(schema).parquet(d.toString)
-    }
-    // run a streaming query with the state shuffle sized to the batch
-    // volume: at these row counts more partitions just multiply
-    // per-partition store-commit overhead (profiled via
-    // tools/ProfileStream). The count is pinned into the checkpoint at
-    // first batch (planned asynchronously after start()), so only
-    // restore the conf once the query has fully stopped.
-    def timedStream(partitions: Int)(start: () => org.apache.spark.sql.streaming.StreamingQuery): Double = {
-      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-      // stop in finally: if processAllAvailable throws, the query must
-      // not keep running (and pinning the conf) into later timed passes
-      var q: org.apache.spark.sql.streaming.StreamingQuery = null
-      try {
-        val t0 = System.nanoTime()
-        q = start()
-        q.processAllAvailable()
-        q.stop() // in the timed window — keeps methodology comparable
-        (System.nanoTime() - t0) / 1e9
-      } finally {
-        // safety net for the failure path only (stop() is idempotent)
-        if (q != null) { try q.stop() catch { case _: Throwable => () } }
-        spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      }
-    }
-    // STREAM CONTENTION GUARD (the query machinery, rate-shaped): two
-    // attempts per section, best (max) rate reported — each attempt gets
-    // a FRESH checkpoint so no state is reused. If the top two
-    // successful rates disagree by >3×, a third attempt decides; still
-    // >3× → the section lands in `suspect_streams` (r5's dau-HDFS 3×
-    // drop was unjudgeable because the rates were single-guarded). A
-    // crash counts as -1 for that attempt only.
-    val suspectStreams = scala.collection.mutable.ListBuffer.empty[String]
     // LOUD CRASHES (round 7): r6 shipped rc:0 / failed:[] while both DAU
     // sections were dead (-1 from every attempt, no message — the NTZ
     // regression went invisible). Any section whose every attempt threw
@@ -442,87 +848,15 @@ object Bench {
         .replaceAll("\\s+", " ").take(300)
       failedStreams(name) = s"${e.getClass.getSimpleName}: $msg"
     }
-    def guardedRate(name: String)(run: () => Double): Double = {
-      var lastErr: Throwable = null
-      def one(): Double = try run() catch { case e: Throwable => lastErr = e; -1.0 }
-      def spread(xs: Seq[Double]): Double = {
-        val ok = xs.filter(_ > 0).sorted(Ordering[Double].reverse)
-        if (ok.size < 2) 1.0 else ok.head / ok(1)
-      }
-      var rs = Seq(one(), one())
-      if (spread(rs) > 3.0) rs = rs :+ one()
-      if (spread(rs) > 3.0) suspectStreams += name
-      if (rs.max <= 0 && lastErr != null) recordStreamFailure(name, lastErr)
-      rs.max
-    }
-    // STREAM LOAD NORMALIZATION (round 9): queries got per-section
-    // calib-normalized values in round 8; stream rows/s did not, and
-    // the r8 artifact shipped dau lines ~2× under the committed clean
-    // run because neighbor load has no normalized axis for rates. Each
-    // stream section now measures its own CPU anchor right before it
-    // runs, and the normalized rate is rate × that calib — "rows per
-    // calibration job", the rate-shaped mirror of time ÷ calib: load
-    // slows the section AND inflates its anchor, so the product holds
-    // steady for the CPU-bound share of the work (the residual
-    // shuffle/IO noise stays, as the r8 study measured for queries).
-    val streamCalibs = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // outer wrapper for each stream section: setup code outside
-    // guardedRate (counts, schema reads) can also throw — same rule,
-    // named + messaged, never a bare -1. Also anchors the section's
-    // calib for the normalized rate — measured BEFORE and AFTER the
-    // section and averaged (the query sections' boundary-mean scheme):
-    // a single pre-section sample left the normalized rate noisier
-    // than the raw one when load shifted mid-section.
-    def streamSection(name: String)(body: => Double): Double = {
-      val c0 = calibrate()
-      val r = try body catch { case e: Throwable => recordStreamFailure(name, e); -1.0 }
-      val c1 = calibrate()
-      streamCalibs(name) =
-        if (c0 > 0 && c1 > 0) (c0 + c1) / 2 else math.max(c0, c1)
-      r
-    }
-    // streaming throughput: the DAU pipeline through a REAL streaming
-    // query — file-stream source → watermark → state-store dedup → noop
-    // sink (a batch DataFrame would take Pipelines' non-streaming
-    // branch and skip the state store entirely). The reference's
-    // envelope is "fits a 5 s trigger on 4 cores" (BASELINE.md);
-    // rows/sec makes that comparable.
-    //
-    // INPUT SIZING (round 6): the sf0.1 events table is ~100k rows —
-    // one micro-batch whose wall is dominated by fixed startup (plan
-    // compile + first state-store open, ~1-3 s), so the reported "rate"
-    // swung 4× between idle runs with IDENTICAL CPU calibrations
-    // (r5's dau-HDFS 29.7k and an r6 repro both trace to this, not to
-    // contention or a store regression — see tools/ProfileStreamIo:
-    // fsync latency flat, warm walls converge once input is ×10).
-    // Each single-batch section therefore replicates its input with an
-    // EXPANDED key space (real state growth, not re-dedup of the same
-    // keys) until sustained throughput dominates the fixed cost.
-    val dauRep = 10
-    def dauRate(name: String): Double = {
-      val n = Tables.events(spark, sfDir).count() * dauRep
-      guardedRate(name) { () =>
-        val ev = Tables.normalizeEventTs(streamOf("events"))
-          .selectExpr("*", s"explode(sequence(0, ${dauRep - 1})) as r")
-          .selectExpr("concat(cast(user_id as string), '#', r) as mid", "ts")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-bench-ckpt").toString
-        val sec = timedStream(partitions = 8) { () =>
-          streaming.Pipelines.dauFirstVisits(ev)
-            .writeStream.format("noop")
-            .option("checkpointLocation", ckpt)
-            .start()
-        }
-        n / sec
-      }
-    }
-    val streamRate = streamSection("stream_dau") { dauRate("stream_dau") }
+    // sections whose attempts still disagree after the guard's third
+    val suspectStreams = scala.collection.mutable.ListBuffer.empty[String]
     // the RocksDB state store — the provider the engine would run on at
     // 1e9-key scale (GraftSession.streamingTune default for the drive
-    // mains); benchmark both so a store-side regression is visible.
-    // providerClass is a runtime SQL conf pinned into each query's
-    // checkpoint at first batch, so flipping it between fully-stopped
-    // queries is safe.
-    def withRocks[A](body: => A): A = {
+    // mains); a row's `rocks` flag runs it there so a store-side
+    // regression is visible. providerClass is a runtime SQL conf pinned
+    // into each query's checkpoint at first batch, so flipping it
+    // between fully-stopped queries is safe.
+    def withRocks[A](on: Boolean)(body: => A): A = if (!on) body else {
       val key = "spark.sql.streaming.stateStore.providerClass"
       val prev = spark.conf.getOption(key)
       spark.conf.set(key,
@@ -533,482 +867,54 @@ object Bench {
         case None => spark.conf.unset(key)
       }
     }
-    val streamRateRocks = streamSection("stream_dau_rocksdb") {
-      withRocks(dauRate("stream_dau_rocksdb"))
+    // one timed attempt, on fresh scratch dirs, with the state shuffle
+    // sized to the batch volume: at these row counts more partitions
+    // just multiply per-partition store-commit overhead. The count is
+    // pinned into the checkpoint at first batch (planned asynchronously
+    // after start()), so the conf is only restored once the row's
+    // queries have fully stopped. -1 unless the row's output check
+    // passes; else rows per second over the row's input.
+    def attempt(s: StreamSection, feed: Feed): Double = {
+      val a = new Attempt(spark, s.name)
+      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", s.partitions.toString)
+      val sec = try {
+        val t0 = System.nanoTime()
+        feed.run(a)
+        (System.nanoTime() - t0) / 1e9
+      } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      if (feed.ok(a)) feed.inputRows / sec else -1.0
     }
-    // stream-stream interval join throughput (the reference's DWS core,
-    // J1/W1): lineitem+orders as two file streams through
-    // Pipelines.orderWideJoin. The corpus's synthetic ship/order dates
-    // are ±2400 days apart, so event time derives from the join key on
-    // both sides (same value → pairs land inside the 20 s skew window) —
-    // the state-store insert/range-probe/watermark path is exercised
-    // with the real 1:N key distribution; only the timestamps are
-    // manufactured. Rows/sec over total input rows; joined-row count is
-    // accumulated and a zero-match run reports -1 instead of a rate.
-    val streamJoinRate: Double = streamSection("stream_join") {
-      import org.apache.spark.sql.functions._
-      val nIn = spark.read.parquet(s"$sfDir/lineitem.parquet").count() +
-        spark.read.parquet(s"$sfDir/orders.parquet").count()
-      def keyTime(key: org.apache.spark.sql.Column) =
-        timestamp_seconds(lit(1700000000L) + key % 86400)
-      import spark.implicits._
-      val oi = streamOf("orders").select(
-        col("o_orderkey").as("id"), col("o_custkey").as("user_id"),
-        lit(0L).as("province_id"), col("o_orderstatus").as("order_status"),
-        col("o_totalprice").as("final_total_amount"),
-        col("o_totalprice").as("original_total_amount"),
-        keyTime(col("o_orderkey")).as("create_time")).as[streaming.OrderInfo]
-      val od = streamOf("lineitem").select(
-        xxhash64(col("l_orderkey"), col("l_linenumber"), col("l_partkey")).as("id"),
-        col("l_orderkey").as("order_id"), col("l_partkey").as("sku_id"),
-        col("l_quantity").cast("long").as("sku_num"),
-        col("l_extendedprice").as("order_price"),
-        keyTime(col("l_orderkey")).as("create_time")).as[streaming.OrderDetail]
-      guardedRate("stream_join") { () =>
-        val acc = spark.sparkContext.longAccumulator("graft-bench-joined")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-bench-jckpt").toString
-        val sec = timedStream(partitions = 16) { () =>
-          streaming.Pipelines.orderWideJoin(oi, od)
-            .writeStream
-            .foreachBatch((b: org.apache.spark.sql.Dataset[streaming.OrderWide], _: Long) =>
-              acc.add(b.count()))
-            .option("checkpointLocation", ckpt)
-            .start()
-        }
-        if (acc.value == 0L) -1.0 else nIn / sec
-      }
-    }
-    // streaming CDC apply (q30's incremental twin): keyed
-    // flatMapGroupsWithState over the full events stream — the
-    // last-writer-wins state-update path with one state row per key.
-    val streamCdcRate: Double = streamSection("stream_cdc_apply") {
-      // ×10 with an expanded user key space (the dau sizing rationale):
-      // 10× state rows, 10× update traffic through the keyed state path
-      val cdcRep = 10
-      val n = Tables.events(spark, sfDir).count() * cdcRep
-      guardedRate("stream_cdc_apply") { () =>
-        val ev = Tables.normalizeEventTs(streamOf("events"))
-          .selectExpr("*", s"explode(sequence(0, ${cdcRep - 1})) as r")
-          .selectExpr(
-            "event_id * 10 + r as event_id", "user_id * 10 + r as user_id",
-            "ts", "event_type", "value", "props")
-        // processed-rows guard (the join bench's accumulator pattern): an
-        // empty/misconfigured stream must report the -1 sentinel, not an
-        // inflated n/sec over near-zero wall time
-        val acc = spark.sparkContext.longAccumulator("graft-bench-cdc")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-bench-cckpt").toString
-        val sec = timedStream(partitions = 8) { () =>
-          streaming.Pipelines.cdcApplyStream(ev)
-            .writeStream
-            .foreachBatch((b: org.apache.spark.sql.Dataset[streaming.CdcRow], _: Long) =>
-              acc.add(b.count()))
-            .option("checkpointLocation", ckpt)
-            .start()
-        }
-        if (acc.value == 0L) -1.0 else n / sec
-      }
-    }
-    // streaming heavy hitters on RocksDB: the windowed (window, gram)
-    // count state is exactly what grows at 1e9-key scale — documents
-    // exploded to a gram stream (the t18 vocabulary) with synthetic
-    // event time spreading docs across five 1-minute windows; rate over
-    // input GRAM rows. Output is the aggregate relation (guard counts
-    // emitted windows — zero emissions = misconfigured watermark, -1).
-    val streamHhRate: Double = streamSection("stream_heavy_hitters_rocksdb") {
-      import org.apache.spark.sql.functions._
-      // ×4 via a window shift (the dau sizing rationale): 4× gram rows
-      // AND 4× (window, gram) state keys — replicas land in disjoint
-      // 1-minute windows, so this grows state, not per-key counts
-      val hhRep = 4
-      val nGrams = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(explode(operators.TextOps.tokens(col("text")))).count() * hhRep
-      withRocks {
-        guardedRate("stream_heavy_hitters_rocksdb") { () =>
-          val grams = streamOf("documents")
-            .selectExpr("*", s"explode(sequence(0, ${hhRep - 1})) as r")
-            .select(
-              explode(operators.TextOps.tokens(col("text"))).as("gram"),
-              timestamp_seconds(lit(1700000000L) + col("doc_id") % 300 +
-                col("r") * 300).as("ts"))
-          val acc = spark.sparkContext.longAccumulator("graft-bench-hh")
-          val ckpt = java.nio.file.Files.createTempDirectory("graft-bench-hckpt").toString
-          val sec = timedStream(partitions = 8) { () =>
-            streaming.Pipelines.heavyHittersWindowed(grams)
-              .writeStream.outputMode("append")
-              .foreachBatch((b: org.apache.spark.sql.DataFrame, _: Long) =>
-                acc.add(b.count()))
-              .option("checkpointLocation", ckpt)
-              .start()
-          }
-          if (acc.value == 0L) -1.0 else nGrams / sec
-        }
-      }
-    }
-    // streaming CMS over the SAME ×4-replicated document feed the
-    // heavy-hitters line tokenizes: the CONSTANT-state twin — ≤
-    // depth×width counter rows total (HDFS store suffices) where the
-    // line above grows per-(window, gram) state; rate over the same
-    // input token rows, so the two lines price exact-vs-sketch
-    // lifetime counting on identical traffic. Update mode: a counter
-    // re-emits whenever it grows.
-    val streamCmsRate: Double = streamSection("stream_cms_sketch") {
-      import org.apache.spark.sql.functions._
-      val cmsRep = 4
-      val nToks = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(explode(operators.TextOps.tokens(col("text")))).count() * cmsRep
-      guardedRate("stream_cms_sketch") { () =>
-        val docs = streamOf("documents")
-          .selectExpr("text", s"explode(sequence(0, ${cmsRep - 1})) as r")
-          .select(col("text"))
-        val acc = spark.sparkContext.longAccumulator("graft-bench-cms")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-bench-cmsckpt").toString
-        val sec = timedStream(partitions = 8) { () =>
-          streaming.Pipelines.cmsSketchStream(docs)
-            .writeStream.outputMode("update")
-            .foreachBatch((b: org.apache.spark.sql.DataFrame, _: Long) =>
-              acc.add(b.count()))
-            .option("checkpointLocation", ckpt)
-            .start()
-        }
-        if (acc.value == 0L) -1.0 else nToks / sec
-      }
-    }
-    // the maintained-CMS deployment twin (round 16): the same sf
-    // documents through cmsMaintainQuery — per-batch sketch under
-    // batch_id partitions + the in-loop sum-fold — so the AT-REST
-    // frequency store's intake cost is round-over-round comparable
-    // alongside the in-session state twin above. Guard: maintained
-    // sums must be non-empty (a file-less store = a dead loop).
-    val streamCmsMaintainRate: Double = streamSection("stream_cms_maintain") {
-      import org.apache.spark.sql.functions._
-      val nToks = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(explode(operators.TextOps.tokens(col("text")))).count()
-      guardedRate("stream_cms_maintain") { () =>
-        val cmsDir = java.nio.file.Files
-          .createTempDirectory("graft-bench-cmsstore").toString
-        val ckpt = java.nio.file.Files
-          .createTempDirectory("graft-bench-cmsmckpt").toString
-        val docs = streamOf("documents").select(col("doc_id"), col("text"))
-        val sec = timedStream(partitions = 8) { () =>
-          streaming.Runner.cmsMaintainQuery(spark, cmsDir, docs, ckpt,
-            compactEveryBatches = 3)
-        }
-        val cells = operators.TextOps.maintainedCms(spark, cmsDir).count()
-        if (cells == 0L) -1.0 else nToks / sec
-      }
-    }
-    // the full LAYERED topology as three concurrent chained streaming
-    // queries (router → join+apportion → trademark agg over file
-    // edges — streaming/Topology.scala): end-to-end chain throughput
-    // over the CDC input lines, wall-clock from first stage start to
-    // final stage drained (startup + commit-log handshakes included —
-    // that IS the chain's latency). Output guard: zero brands in the
-    // final agg = a dead stage, -1.
-    val streamTopologyRate: Double = streamSection("stream_topology") {
-      import org.apache.spark.sql.functions.col
-      val fixDir = java.nio.file.Files.createTempDirectory("graft-bench-topofix").toString
-      val n = streaming.Topology.writeCdcFixture(spark, sfDir, fixDir)
-      guardedRate("stream_topology") { () =>
-        val root = java.nio.file.Files.createTempDirectory("graft-bench-topo").toString
-        val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "16")
-        try {
-          val t0 = System.nanoTime()
-          val chain = streaming.Topology.start(spark, fixDir,
-            s"$root/routed", s"$root/wide", s"$root/agg", s"$root/ckpt",
-            () => Tables.part(spark, sfDir).select(col("p_partkey"), col("p_brand")))
-          try { chain.drain() } finally chain.stopAll()
-          val sec = (System.nanoTime() - t0) / 1e9
-          if (spark.read.parquet(s"$root/agg").isEmpty) -1.0 else n / sec
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      }
-    }
-    // the two streaming INTAKE loops — the library's flagship
-    // deployment shapes (r9 verdict Next #2: measured ad hoc by
-    // TimeDedupServe/TimeCurateIntake, now round-over-round comparable
-    // on the artifact). The documents table is split into 4 files and
-    // fed as 4 micro-batches (maxFilesPerTrigger=1): each batch probes
-    // the index maintained by the PREVIOUS batches, so the measured
-    // path is the real loop (probe + intra-batch first-wins + two
-    // exactly-once sinks), not a single-batch special case. Rate over
-    // input docs; fresh index/decisions/checkpoint per attempt (a
-    // reused index would change the work); the 4-file fixture is
-    // shared, built once untimed. Guard: one decision row per doc, or
-    // -1. For curate_intake the NB model + eval-gram builds land
-    // INSIDE the timed window (they amortize over a real stream's
-    // lifetime, but belong in an honest single-feed number —
-    // TimeCurateIntake's convention).
-    def intakeFixture(): String = fixture(s"intakefix|$sfDir") {
-      import org.apache.spark.sql.functions.col
-      val d = java.nio.file.Files.createTempDirectory("graft-bench-intakefix").toString
-      spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("text"))
-        .repartition(4).write.mode("overwrite").parquet(d)
-      d
-    }
-    def intakeRate(name: String, fix: String)(
-        start: (DataFrame, String, String, String) =>
-          org.apache.spark.sql.streaming.StreamingQuery): Double = {
-      val nDocs = spark.read.parquet(fix).count()
-      val schema = spark.read.parquet(fix).schema
-      guardedRate(name) { () =>
-        val idx = java.nio.file.Files.createTempDirectory(s"graft-bench-$name-idx").toString
-        val out = java.nio.file.Files.createTempDirectory(s"graft-bench-$name-out").toString
-        val ckpt = java.nio.file.Files.createTempDirectory(s"graft-bench-$name-ckpt").toString
-        val docStream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(fix)
-        val sec = timedStream(partitions = 8) { () =>
-          start(docStream, idx, out, ckpt)
-        }
-        if (spark.read.parquet(out).count() != nDocs) -1.0 else nDocs / sec
-      }
-    }
-    val streamDedupIntakeRate: Double = streamSection("stream_dedup_intake") {
-      intakeRate("stream_dedup_intake", intakeFixture())((ds, idx, out, ckpt) =>
-        streaming.Runner.dedupIntakeQuery(spark, idx, ds, out, ckpt))
-    }
-    val streamCurateIntakeRate: Double = streamSection("stream_curate_intake") {
-      intakeRate("stream_curate_intake", intakeFixture())((ds, idx, out, ckpt) =>
-        streaming.Runner.curateIntakeQuery(spark, sfDir, idx, ds, out, ckpt))
-    }
-    // amortized intake (r10 verdict Next #7): the 4-file sf feed above
-    // measures the ~15-job/trigger FIXED-COST FLOOR (1,250 docs per
-    // trigger at sf0.1); production batches are bigger, and the
-    // TimeCurateIntake study showed docs/s rising with batch size until
-    // stage work dominates. Carry that amortized point on the artifact:
-    // ONE 20 k-doc trigger over the SyntheticDocs corpus (distinct
-    // ~40-token docs, ~2% near-dups — replicating the 5 000 testdata
-    // docs would drown the dup path with exact copies). Models and
-    // eval-dicts still build from sfDir inside the timed window, the
-    // honest single-feed convention shared with the lines above.
-    def intake20kFixture(): String = fixture("intake20k") {
-      val d = java.nio.file.Files.createTempDirectory("graft-bench-intake20k").toString
-      sources.SyntheticDocs.corpus(spark, 20000L).coalesce(1)
-        .write.mode("overwrite").parquet(d)
-      d
-    }
-    val streamCurateIntake20kRate: Double = streamSection("stream_curate_intake_20k") {
-      intakeRate("stream_curate_intake_20k", intake20kFixture())((ds, idx, out, ckpt) =>
-        streaming.Runner.curateIntakeQuery(spark, sfDir, idx, ds, out, ckpt))
-    }
-    // amortized DEDUP intake (r14 verdict Next #4): the 4-file sf feed
-    // above prices the loop's fixed trigger cost only (~318 docs/s);
-    // one 20 k-doc trigger over the same SyntheticDocs corpus carries
-    // the amortized sustained point, the curate_intake_20k precedent
-    // applied to the bare dedup loop (probe + first-wins + two
-    // exactly-once sinks, no NB/decontam stages).
-    val streamDedupIntake20kRate: Double = streamSection("stream_dedup_intake_20k") {
-      intakeRate("stream_dedup_intake_20k", intake20kFixture())((ds, idx, out, ckpt) =>
-        streaming.Runner.dedupIntakeQuery(spark, idx, ds, out, ckpt))
-    }
-    // streaming graph maintenance (round 15): the sf events table fed
-    // in ONE trigger through transitionStream (keyed last-event state)
-    // + pageRankMaintainQuery (edge-count partitions + per-trigger
-    // 10-iteration rank recompute). Like hnsw_serve, the line prices
-    // the LOOP (state pass + edge write + recompute floor) — the
-    // recompute itself is the q36 batch operator, already timed on the
-    // gate; rate over input event rows. Guard: ranks must exist with
-    // every observed node ranked.
-    val streamPageRankRate: Double = streamSection("stream_pagerank_maintain") {
-      import org.apache.spark.sql.functions.col
-      val nEvents = spark.read.parquet(s"$sfDir/events.parquet").count()
-      guardedRate("stream_pagerank_maintain") { () =>
-        val graphDir = java.nio.file.Files
-          .createTempDirectory("graft-bench-prgraph").toString
-        val ckpt = java.nio.file.Files
-          .createTempDirectory("graft-bench-prckpt").toString
-        val feed = streamOf("events").select(col("user_id"),
-          col("ts").cast("timestamp").as("ts"), col("event_id"),
-          col("event_type"))
-        val sec = timedStream(partitions = 8) { () =>
-          streaming.Runner.pageRankMaintainQuery(spark, graphDir,
-            streaming.Pipelines.transitionStream(feed).toDF(), ckpt)
-        }
-        val ranked = spark.read.parquet(s"$graphDir/ranks").count()
-        if (ranked == 0L) -1.0 else nEvents / sec
-      }
-    }
-    // streaming COMPONENTS maintenance (round 17, the r16 verdict's
-    // Next #3): the sf corpus's bigram edge feed in 4 micro-batches
-    // through componentsMaintainQuery — the pageRank loop's store and
-    // fold with the recompute swapped for min-label components. Like
-    // stream_pagerank_maintain this prices the LOOP (edge write + fold
-    // + per-trigger recompute floor); the recompute is the q37 batch
-    // operator, already timed on the gate. Rate over input edge rows.
-    // Guard: every node of the fed graph must come out labeled.
-    val streamComponentsRate: Double = streamSection("stream_components_maintain") {
-      import org.apache.spark.sql.functions.col
-      val fix = {
-        val d = java.nio.file.Files.createTempDirectory("graft-bench-ccfix").toString
-        operators.GraphOps.bigramEdges(spark, sfDir)
-          .repartition(4).write.mode("overwrite").parquet(d)
-        d
-      }
-      val nEdges = spark.read.parquet(fix).count()
-      val nNodes = spark.read.parquet(fix).select(col("src").as("n"))
-        .union(spark.read.parquet(fix).select(col("dst"))).distinct().count()
-      val schema = spark.read.parquet(fix).schema
-      guardedRate("stream_components_maintain") { () =>
-        val graphDir = java.nio.file.Files
-          .createTempDirectory("graft-bench-ccgraph").toString
-        val ckpt = java.nio.file.Files
-          .createTempDirectory("graft-bench-ccckpt").toString
-        val pairStream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(fix)
-        val sec = timedStream(partitions = 8) { () =>
-          streaming.Runner.componentsMaintainQuery(spark, graphDir,
-            pairStream, ckpt)
-        }
-        val labeled = spark.read.parquet(s"$graphDir/labels").count()
-        if (labeled != nNodes) -1.0 else nEdges / sec
-      }
-    }
-    // the same loop at recompute cadence 3 (r17 verdict Next #1's
-    // done-criterion): 4 micro-batches recompute at batch ids 0 and 3
-    // instead of all four — the line quantifies the floor lift the
-    // web-scale dial buys (the final batch id falls ON the cadence, so
-    // the every-node-labeled guard still holds). Same fixture shape as
-    // the cadence-1 line above for direct comparison.
-    val streamComponentsC3Rate: Double = streamSection("stream_components_maintain_c3") {
-      import org.apache.spark.sql.functions.col
-      val fix = {
-        val d = java.nio.file.Files.createTempDirectory("graft-bench-ccfix3").toString
-        operators.GraphOps.bigramEdges(spark, sfDir)
-          .repartition(4).write.mode("overwrite").parquet(d)
-        d
-      }
-      val nEdges = spark.read.parquet(fix).count()
-      val nNodes = spark.read.parquet(fix).select(col("src").as("n"))
-        .union(spark.read.parquet(fix).select(col("dst"))).distinct().count()
-      val schema = spark.read.parquet(fix).schema
-      guardedRate("stream_components_maintain_c3") { () =>
-        val graphDir = java.nio.file.Files
-          .createTempDirectory("graft-bench-ccgraph3").toString
-        val ckpt = java.nio.file.Files
-          .createTempDirectory("graft-bench-ccckpt3").toString
-        val pairStream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(fix)
-        val sec = timedStream(partitions = 8) { () =>
-          streaming.Runner.componentsMaintainQuery(spark, graphDir,
-            pairStream, ckpt, recomputeEveryBatches = 3)
-        }
-        val labeled = spark.read.parquet(s"$graphDir/labels").count()
-        if (labeled != nNodes) -1.0 else nEdges / sec
-      }
-    }
-    // streaming HNSW index maintenance (round 13): the sf embedding
-    // table fed as 4 micro-batches through hnswMaintainQuery's
-    // LSM-segment default, a fresh index per attempt. Like the intake
-    // floors, sf-scale input (2 k vectors at sf0.1) makes this the
-    // FIXED-COST FLOOR of the loop (checkpoint + per-batch left-anti +
-    // one small segment build/write per trigger), carried on the
-    // artifact so the maintain path is round-over-round comparable;
-    // SCALE.md's maintain A/B prices the sustained 1e6-base shape.
-    // Guard: every fed vector indexed exactly once (level-0 count).
-    val streamHnswMaintainRate: Double = streamSection("stream_hnsw_maintain") {
-      import org.apache.spark.sql.functions.col
-      val fix = {
-        val d = java.nio.file.Files.createTempDirectory("graft-bench-hnswfix").toString
-        spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .select(col("vec_id"), col("embedding"))
-          .repartition(4).write.mode("overwrite").parquet(d)
-        d
-      }
-      val nVecs = spark.read.parquet(fix).count()
-      val schema = spark.read.parquet(fix).schema
-      guardedRate("stream_hnsw_maintain") { () =>
-        val idx = java.nio.file.Files.createTempDirectory("graft-bench-hnswidx").toString
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-bench-hnswckpt").toString
-        val vecStream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(fix)
-        val sec = timedStream(partitions = 8) { () =>
-          streaming.Runner.hnswMaintainQuery(spark, idx, vecStream, ckpt)
-        }
-        val indexed = spark.read.parquet(s"$idx/graph")
-          .filter(col("level") === 0).count()
-        if (indexed != nVecs) -1.0 else nVecs / sec
-      }
-    }
-    // amortized HNSW maintain (r13 verdict Next #6): the sf-table feed
-    // above is the FIXED-COST FLOOR (~500 vectors/trigger at sf0.1 —
-    // checkpoint + diff + one tiny segment build per trigger);
-    // production maintain batches are bigger and the segment path's
-    // cost is BATCH-sized, so the floor under-reports sustained
-    // throughput exactly the way the intake floor did (the 20 k-doc
-    // precedent above). Carry the amortized point: ONE 20 k-vector
-    // trigger of clustered hash-jittered synthetic embeddings (the
-    // DriveHnswScale corpus shape — the sf table is too small for an
-    // amortized feed), fresh index per attempt. Guard: every fed
-    // vector indexed exactly once (level-0 count).
-    val streamHnswMaintain20kRate: Double = streamSection("stream_hnsw_maintain_20k") {
-      import org.apache.spark.sql.functions._
-      val nVecs = 20000L
-      val fix = {
-        val d = java.nio.file.Files.createTempDirectory("graft-bench-hnsw20k").toString
-        val dim = 64
-        spark.range(nVecs).select(col("id").as("vec_id"),
-          transform(sequence(lit(0), lit(dim - 1)), i => {
-            val grp = pmod(col("id"), lit(64))
-            val center = pmod(grp * (i + 7) + grp * grp * 13, lit(401))
-              .cast("double") - 200.0
-            (center + pmod(xxhash64(col("id"), i), lit(160000)).cast("double")
-              / 10000.0 - 8.0).cast("float")
-          }).as("embedding"))
-          .coalesce(1).write.mode("overwrite").parquet(d)
-        d
-      }
-      val schema = spark.read.parquet(fix).schema
-      guardedRate("stream_hnsw_maintain_20k") { () =>
-        val idx = java.nio.file.Files.createTempDirectory("graft-bench-hnsw20kidx").toString
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-bench-hnsw20kckpt").toString
-        val vecStream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(fix)
-        val sec = timedStream(partitions = 8) { () =>
-          streaming.Runner.hnswMaintainQuery(spark, idx, vecStream, ckpt)
-        }
-        val indexed = spark.read.parquet(s"$idx/graph")
-          .filter(col("level") === 0).count()
-        if (indexed != nVecs) -1.0 else nVecs / sec
-      }
-    }
-    // ONLINE HNSW serving (r13 verdict Next #3): a (query_id,
-    // embedding) stream answered per micro-batch from the AT-REST
-    // sharded index (hnswServeQuery → annHnswServeShardedQueries
-    // through ShardGraphCache) — the deployment a vector store runs.
-    // Two ~50-query batches against the bench's prebuilt sf index;
-    // shard residency persists across attempts (the production steady
-    // state — the serving tier stays warm), so this line prices walks
-    // + rescore + the K5 sink, not reconstruction
-    // (v19_ann_hnsw_serve carries the cold tier). Rate over query
-    // rows. Guard: exactly k answers for every query across both
-    // batches.
-    val streamHnswServeRate: Double = streamSection("stream_hnsw_serve") {
-      import org.apache.spark.sql.functions.col
-      val idx = hnswShardedIndexFor(spark, sfDir)
-      val nQ = math.min(100L,
-        spark.read.parquet(s"$sfDir/embeddings.parquet").count())
-      val fix = {
-        val d = java.nio.file.Files.createTempDirectory("graft-bench-hnswsrvfix").toString
-        spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .filter(col("vec_id") < nQ)
-          .select(col("vec_id").as("query_id"), col("embedding"))
-          .repartition(2).write.mode("overwrite").parquet(d)
-        d
-      }
-      val schema = spark.read.parquet(fix).schema
-      guardedRate("stream_hnsw_serve") { () =>
-        val out = java.nio.file.Files.createTempDirectory("graft-bench-hnswsrvout").toString
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-bench-hnswsrvckpt").toString
-        val qStream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(fix)
-        val sec = timedStream(partitions = 8) { () =>
-          streaming.Runner.hnswServeQuery(spark, idx, qStream, out, ckpt)
-        }
-        val answers = spark.read.parquet(out)
-        if (answers.count() != nQ * 5 ||
-            answers.select(col("query_id")).distinct().count() != nQ) -1.0
-        else nQ / sec
-      }
+    // STREAM LOAD NORMALIZATION (round 9): queries got per-section
+    // calib-normalized values in round 8; stream rows/s did not, and
+    // the r8 artifact shipped dau lines ~2× under the committed clean
+    // run because neighbor load has no normalized axis for rates. Each
+    // stream section therefore anchors its own calib, measured BEFORE
+    // and AFTER the section and averaged (the query sections'
+    // boundary-mean scheme — a single pre-section sample left the
+    // normalized rate noisier than the raw one when load shifted
+    // mid-section), and the normalized rate is rate × that calib —
+    // "rows per calibration job", the rate-shaped mirror of time ÷
+    // calib: load slows the section AND inflates its anchor, so the
+    // product holds steady for the CPU-bound share of the work (the
+    // residual shuffle/IO noise stays, as the r8 study measured for
+    // queries). A row's untimed setup (counts, schema reads, fixtures)
+    // can throw too — same rule, named + messaged, never a bare -1.
+    val streamCalibs = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val ctx = new StreamCtx(spark, sfDir)
+    val streamRates: Seq[(String, Double)] = streamSections.map { s =>
+      val c0 = calibrate()
+      val rate = try withRocks(s.rocks) {
+        val feed = s.setup(ctx)
+        val g = guardAttempts(() => attempt(s, feed))
+        if (g.suspect) suspectStreams += s.name
+        g.failure.foreach(recordStreamFailure(s.name, _))
+        g.rate
+      } catch { case e: Throwable => recordStreamFailure(s.name, e); -1.0 }
+      val c1 = calibrate()
+      streamCalibs(s.name) =
+        if (c0 > 0 && c1 > 0) (c0 + c1) / 2 else math.max(c0, c1)
+      s.name -> rate
     }
     // second anchor: sustained load that began after the first
     // calibration (mid-queries or mid-streams) is only visible here —
@@ -1130,25 +1036,9 @@ object Bench {
       val c = streamCalibs.getOrElse(name, -1.0)
       if (rate > 0 && c > 0) math.round(rate * c) else -1L
     }
-    val streamNormJson = Seq(
-      "stream_dau" -> streamRate,
-      "stream_dau_rocksdb" -> streamRateRocks,
-      "stream_join" -> streamJoinRate,
-      "stream_cdc_apply" -> streamCdcRate,
-      "stream_topology" -> streamTopologyRate,
-      "stream_heavy_hitters_rocksdb" -> streamHhRate,
-      "stream_cms_sketch" -> streamCmsRate,
-      "stream_cms_maintain" -> streamCmsMaintainRate,
-      "stream_pagerank_maintain" -> streamPageRankRate,
-      "stream_components_maintain" -> streamComponentsRate,
-      "stream_components_maintain_c3" -> streamComponentsC3Rate,
-      "stream_dedup_intake" -> streamDedupIntakeRate,
-      "stream_curate_intake" -> streamCurateIntakeRate,
-      "stream_curate_intake_20k" -> streamCurateIntake20kRate,
-      "stream_dedup_intake_20k" -> streamDedupIntake20kRate,
-      "stream_hnsw_maintain" -> streamHnswMaintainRate,
-      "stream_hnsw_maintain_20k" -> streamHnswMaintain20kRate,
-      "stream_hnsw_serve" -> streamHnswServeRate)
+    val streamRatesJson = streamRates
+      .map { case (n, r) => s""""${n}_rows_per_sec":${r.toLong}""" }.mkString(",")
+    val streamNormJson = streamRates
       .map { case (n, r) => s""""${n}_rows_per_calib":${streamNorm(n, r)}""" }
       .mkString(",")
     val streamCalibsJson = streamCalibs
@@ -1180,24 +1070,7 @@ object Bench {
       s""""suspect_queries":${jsonArr(suspectQueries)},""" +
       s""""suspect_streams":${jsonArr(suspectStreams.toSeq)},""" +
       s""""failed_streams":$failedStreamsJson,""" +
-      s""""stream_dau_rows_per_sec":${streamRate.toLong},""" +
-      s""""stream_dau_rocksdb_rows_per_sec":${streamRateRocks.toLong},""" +
-      s""""stream_join_rows_per_sec":${streamJoinRate.toLong},""" +
-      s""""stream_cdc_apply_rows_per_sec":${streamCdcRate.toLong},""" +
-      s""""stream_topology_rows_per_sec":${streamTopologyRate.toLong},""" +
-      s""""stream_heavy_hitters_rocksdb_rows_per_sec":${streamHhRate.toLong},""" +
-      s""""stream_cms_sketch_rows_per_sec":${streamCmsRate.toLong},""" +
-      s""""stream_cms_maintain_rows_per_sec":${streamCmsMaintainRate.toLong},""" +
-      s""""stream_pagerank_maintain_rows_per_sec":${streamPageRankRate.toLong},""" +
-      s""""stream_components_maintain_rows_per_sec":${streamComponentsRate.toLong},""" +
-      s""""stream_components_maintain_c3_rows_per_sec":${streamComponentsC3Rate.toLong},""" +
-      s""""stream_dedup_intake_rows_per_sec":${streamDedupIntakeRate.toLong},""" +
-      s""""stream_curate_intake_rows_per_sec":${streamCurateIntakeRate.toLong},""" +
-      s""""stream_curate_intake_20k_rows_per_sec":${streamCurateIntake20kRate.toLong},""" +
-      s""""stream_dedup_intake_20k_rows_per_sec":${streamDedupIntake20kRate.toLong},""" +
-      s""""stream_hnsw_maintain_rows_per_sec":${streamHnswMaintainRate.toLong},""" +
-      s""""stream_hnsw_maintain_20k_rows_per_sec":${streamHnswMaintain20kRate.toLong},""" +
-      s""""stream_hnsw_serve_rows_per_sec":${streamHnswServeRate.toLong},""" +
+      streamRatesJson + "," +
       streamNormJson + "," +
       s""""stream_topology_local4_max_trigger_ms":${local4Parity.maxMs},""" +
       s""""stream_topology_local4_mean_trigger_ms":${local4Parity.meanMs},""" +

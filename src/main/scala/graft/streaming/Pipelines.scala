@@ -154,6 +154,26 @@ object Pipelines {
 
   private def roundC(d: Double): Long = Math.round(d * 100)
 
+  /** The keyed-state TTL policy of every TTL'd operator below: TTL 0
+    * means no timeout; an expired key is removed and emits nothing;
+    * every touch refreshes the TTL. Each `*Group` state function wraps
+    * its per-key step in `Ttl(stateTtlMs, state) { … }`, and its
+    * operator registers `Ttl.timeout(stateTtlMs)`. */
+  private object Ttl {
+    def timeout(stateTtlMs: Long): GroupStateTimeout =
+      if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
+      else GroupStateTimeout.NoTimeout
+
+    def apply[S, U](stateTtlMs: Long, state: GroupState[S])(
+        step: => Iterator[U]): Iterator[U] =
+      if (state.hasTimedOut) { state.remove(); Iterator.empty }
+      else {
+        val out = step
+        if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
+        out
+      }
+  }
+
   /** A3 apportionment (`dws/OrderWideApp.scala:136-178`), exact reference
     * semantics: per order, running origin/split sums live in keyed state;
     * each detail gets the proportional share `round(final * detail /
@@ -170,18 +190,14 @@ object Pipelines {
   def apportion(rows: Dataset[OrderWide],
                 stateTtlMs: Long = 600000L): Dataset[OrderWideSplit] = {
     import rows.sparkSession.implicits._
-    val timeoutConf =
-      if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     rows.groupByKey(_.order_id)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
+      .flatMapGroupsWithState(OutputMode.Append, Ttl.timeout(stateTtlMs))(
         apportionGroup(stateTtlMs))
   }
 
   private[streaming] def apportionGroup(stateTtlMs: Long)(
       orderId: Long, rows: Iterator[OrderWide],
-      state: GroupState[ApportionState]): Iterator[OrderWideSplit] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
+      state: GroupState[ApportionState]): Iterator[OrderWideSplit] = Ttl(stateTtlMs, state) {
     var st = state.getOption.getOrElse(ApportionState(0L, 0L))
     val out = rows.toSeq.sortBy(_.order_detail_id).map { r =>
       val detailC = roundC(r.sku_price * r.sku_num)
@@ -199,7 +215,6 @@ object Pipelines {
         r.create_time, shareC / 100.0)
     }
     state.update(st)
-    if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
     out.iterator
   }
 
@@ -304,18 +319,14 @@ object Pipelines {
     val typed = docs.select(col("lang"), col("doc_id").cast("long"),
         md5(col("doc_id").cast("string").cast("binary")).as("rk_key"))
       .as[(String, Long, String)]
-    val timeoutConf =
-      if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     typed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
+      .flatMapGroupsWithState(OutputMode.Append, Ttl.timeout(stateTtlMs))(
         sampleGroup(quota, stateTtlMs))
   }
 
   private[streaming] def sampleGroup(quota: Int, stateTtlMs: Long)(
       lang: String, rows: Iterator[(String, Long, String)],
-      state: GroupState[SampleState]): Iterator[SampleRow] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
+      state: GroupState[SampleState]): Iterator[SampleRow] = Ttl(stateTtlMs, state) {
     val cur = state.getOption.getOrElse(SampleState(0, Nil))
     // bounded bottom-k merge: keep exactly the quota smallest (rk_key,
     // doc_id) pairs — same ordering as the batch window (rk_key asc,
@@ -339,7 +350,6 @@ object Pipelines {
     val next = SampleState(cur.ver + 1,
       merged.map { case (k, id) => SampleMember(k, id) })
     state.update(next)
-    if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
     merged.iterator.zipWithIndex.map { case ((_, id), i) =>
       SampleRow(lang, next.ver, id, i + 1) }
   }
@@ -365,18 +375,14 @@ object Pipelines {
       .select(col("lang"), col("doc_id").cast("long"),
         graft.operators.TextOps.esKey(beta).as("es_key"))
       .as[(String, Long, Double)]
-    val timeoutConf =
-      if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     typed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
+      .flatMapGroupsWithState(OutputMode.Append, Ttl.timeout(stateTtlMs))(
         wSampleGroup(quota, stateTtlMs))
   }
 
   private[streaming] def wSampleGroup(quota: Int, stateTtlMs: Long)(
       lang: String, rows: Iterator[(String, Long, Double)],
-      state: GroupState[WSampleState]): Iterator[WSampleRow] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
+      state: GroupState[WSampleState]): Iterator[WSampleRow] = Ttl(stateTtlMs, state) {
     val cur = state.getOption.getOrElse(WSampleState(0, Nil))
     // bounded top-k merge: order by (key DESC, doc_id ASC) — the batch
     // operator's orderBy — stored as (-key, doc_id) so the TreeSet's
@@ -395,7 +401,6 @@ object Pipelines {
     val next = WSampleState(cur.ver + 1,
       merged.map { case (nk, id) => WSampleMember(-nk, id) })
     state.update(next)
-    if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
     merged.iterator.zipWithIndex.map { case ((_, id), i) =>
       WSampleRow(lang, next.ver, id, i + 1) }
   }
@@ -422,18 +427,14 @@ object Pipelines {
     val typed = events.select(col("user_id").cast("long"), col("ts"),
         col("event_id").cast("long"), col("event_type"))
       .as[(Long, java.sql.Timestamp, Long, String)]
-    val timeoutConf =
-      if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     typed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
+      .flatMapGroupsWithState(OutputMode.Append, Ttl.timeout(stateTtlMs))(
         transitionGroup(stateTtlMs))
   }
 
   private[streaming] def transitionGroup(stateTtlMs: Long)(
       user: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, String)],
-      state: GroupState[TransitionState]): Iterator[TransitionRow] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
+      state: GroupState[TransitionState]): Iterator[TransitionRow] = Ttl(stateTtlMs, state) {
     // Timestamp ordering via compareTo keeps sub-millisecond precision
     // (getTime alone truncates to ms — Tables.normalizeEventTs emits
     // micros, and the batch LEAD window orders by the full value), the
@@ -457,7 +458,6 @@ object Pipelines {
       }
     }
     last.foreach(state.update)
-    if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
     out.result().iterator
   }
 
@@ -489,18 +489,14 @@ object Pipelines {
         .md5_minhash_sigs(col("shingles"), lit(numHashes)).as("sigs"))
       .filter(col("sigs").isNotNull)
       .as[(String, Seq[String])]
-    val timeoutConf =
-      if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     sigs.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
+      .flatMapGroupsWithState(OutputMode.Append, Ttl.timeout(stateTtlMs))(
         sketchGroup(stateTtlMs))
   }
 
   private[streaming] def sketchGroup(stateTtlMs: Long)(
       source: String, rows: Iterator[(String, Seq[String])],
-      state: GroupState[SketchState]): Iterator[SketchRow] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
+      state: GroupState[SketchState]): Iterator[SketchRow] = Ttl(stateTtlMs, state) {
     var mins: Array[String] = state.getOption.map(_.mins.toArray).orNull
     rows.foreach { case (_, sig) =>
       if (mins == null) mins = sig.toArray
@@ -511,12 +507,13 @@ object Pipelines {
         }
       }
     }
-    if (mins == null) return Iterator.empty // timeout-only invocation
-    val ver = state.getOption.map(_.ver).getOrElse(0) + 1
-    state.update(SketchState(ver, mins.toSeq))
-    if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
-    mins.iterator.zipWithIndex.map { case (mh, p) =>
-      SketchRow(source, ver, p, mh) }
+    if (mins == null) Iterator.empty // no rows and no prior sketch
+    else {
+      val ver = state.getOption.map(_.ver).getOrElse(0) + 1
+      state.update(SketchState(ver, mins.toSeq))
+      mins.iterator.zipWithIndex.map { case (mh, p) =>
+        SketchRow(source, ver, p, mh) }
+    }
   }
 
   /** Streaming near-dup candidate detection — the incremental form of
@@ -563,11 +560,8 @@ object Pipelines {
         graft.operators.Dedup.bandHashCols(col("sigs"), numHashes, bands): _*)))
       .select(col("doc_id"), col("pos").as("band"), col("col").as("bucket"))
       .as[(Long, Int, Long)]
-    val timeoutConf =
-      if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     banded.groupByKey { case (_, band, bucket) => (band, bucket) }
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
+      .flatMapGroupsWithState(OutputMode.Append, Ttl.timeout(stateTtlMs))(
         nearDupGroup(stateTtlMs, maxBucketSize))
       .toDF("id_a", "id_b", "band").as[(Long, Long, Int)]
   }
@@ -578,8 +572,7 @@ object Pipelines {
 
   private[streaming] def nearDupGroup(stateTtlMs: Long, maxBucketSize: Int = 1024)(
       key: (Int, Long), rows: Iterator[(Long, Int, Long)],
-      state: GroupState[List[Long]]): Iterator[(Long, Long, Int)] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
+      state: GroupState[List[Long]]): Iterator[(Long, Long, Int)] = Ttl(stateTtlMs, state) {
     var seen = state.getOption.getOrElse(Nil)
     // hot buckets (stop-shingle band collisions) can hold many docs —
     // O(1) membership via a local set; the stored state stays a List
@@ -603,7 +596,6 @@ object Pipelines {
       }
     }
     state.update(seen)
-    if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
     out.iterator
   }
 
@@ -630,18 +622,14 @@ object Pipelines {
       .select(col("event_id").cast("long"), col("user_id").cast("long"),
         col("ts").cast("timestamp"), col("event_type"))
       .as[(Long, Long, java.sql.Timestamp, String)]
-    val timeoutConf =
-      if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     typed.groupByKey(_._2)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
+      .flatMapGroupsWithState(OutputMode.Append, Ttl.timeout(stateTtlMs))(
         attributionGroup(stateTtlMs))
   }
 
   private[streaming] def attributionGroup(stateTtlMs: Long)(
       user: Long, rows: Iterator[(Long, Long, java.sql.Timestamp, String)],
-      state: GroupState[ClickState]): Iterator[Attribution] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
+      state: GroupState[ClickState]): Iterator[Attribution] = Ttl(stateTtlMs, state) {
     var last = state.getOption
     val out = scala.collection.mutable.ListBuffer.empty[Attribution]
     // clicks sort before purchases at the same instant (inclusive >=,
@@ -671,7 +659,6 @@ object Pipelines {
             stale_state = valid.isEmpty && last.nonEmpty)
       }
     last.foreach(state.update)
-    if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
     out.iterator
   }
 
@@ -693,23 +680,18 @@ object Pipelines {
     // stream and batch cannot drift
     val ranks = graft.operators.GmallQueries.Hll.registerRanks(events)
       .as[(java.sql.Date, Int, Int)]
-    val timeoutConf =
-      if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     ranks.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
+      .flatMapGroupsWithState(OutputMode.Append, Ttl.timeout(stateTtlMs))(
         hllGroup(stateTtlMs))
   }
 
   private[streaming] def hllGroup(stateTtlMs: Long)(
       dt: java.sql.Date, rows: Iterator[(java.sql.Date, Int, Int)],
-      state: GroupState[Seq[Int]]): Iterator[(java.sql.Date, Double)] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
+      state: GroupState[Seq[Int]]): Iterator[(java.sql.Date, Double)] = Ttl(stateTtlMs, state) {
     val regs = state.getOption.map(_.toArray)
       .getOrElse(new Array[Int](graft.operators.GmallQueries.Hll.m))
     rows.foreach { case (_, j, r) => if (r > regs(j)) regs(j) = r }
     state.update(regs.toSeq)
-    if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
     Iterator.single((dt, graft.operators.GmallQueries.Hll.estimate(regs)))
   }
 
@@ -736,20 +718,16 @@ object Pipelines {
       .select(col("event_id").cast("long"), col("user_id").cast("long"),
         col("ts").cast("timestamp"), col("event_type"))
       .as[(Long, Long, java.sql.Timestamp, String)]
-    val timeoutConf =
-      if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     typed.groupByKey(_._2)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
+      .flatMapGroupsWithState(OutputMode.Append, Ttl.timeout(stateTtlMs))(
         scd2Group(stateTtlMs))
   }
 
   private[streaming] def scd2Group(stateTtlMs: Long)(
       user: Long, rows: Iterator[(Long, Long, java.sql.Timestamp, String)],
-      state: GroupState[Scd2State]): Iterator[Scd2Row] = {
+      state: GroupState[Scd2State]): Iterator[Scd2Row] = Ttl(stateTtlMs, state) {
     // a TTL'd key drops its open run — acceptable for abandoned keys,
     // the same trade the reference's Redis TTLs make
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
     var cur = state.getOption
     val out = scala.collection.mutable.ListBuffer.empty[Scd2Row]
     rows.toSeq
@@ -778,7 +756,6 @@ object Pipelines {
         }
       }
     cur.foreach(state.update)
-    if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
     out.iterator
   }
 
@@ -799,19 +776,15 @@ object Pipelines {
         col("value").cast("double"),
         get_json_object(col("props"), "$.k").cast("int"))
       .as[(Long, Long, java.sql.Timestamp, String, Double, Option[Int])]
-    val timeoutConf =
-      if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     typed.groupByKey(_._2)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
+      .flatMapGroupsWithState(OutputMode.Append, Ttl.timeout(stateTtlMs))(
         cdcApplyGroup(stateTtlMs))
   }
 
   private[streaming] def cdcApplyGroup(stateTtlMs: Long)(
       user: Long,
       rows: Iterator[(Long, Long, java.sql.Timestamp, String, Double, Option[Int])],
-      state: GroupState[CdcRow]): Iterator[CdcRow] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
+      state: GroupState[CdcRow]): Iterator[CdcRow] = Ttl(stateTtlMs, state) {
     var cur = state.getOption
     rows.foreach { case (id, uid, ts, et, v, k) =>
       val newer = cur.forall { c =>
@@ -824,7 +797,6 @@ object Pipelines {
         else cur.map(c => c.copy(n_ops = n))
     }
     cur.foreach(state.update)
-    if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
     cur.iterator
   }
 

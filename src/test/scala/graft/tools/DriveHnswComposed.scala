@@ -82,7 +82,7 @@ object DriveHnswComposed {
       val mSchema = spark.read.parquet(s"$dir/feedm/b0000").schema
       val qSchema = spark.read.parquet(s"$dir/feedq/q0000").schema
       // file sources need one directory of files; symlink-flatten the
-      // per-batch dirs into flat feed dirs (the Bench.streamOf pattern)
+      // per-batch dirs into flat feed dirs (the Bench.StreamCtx.streamOf pattern)
       def flatten(from: String, to: String): Unit = {
         new java.io.File(to).mkdirs()
         new java.io.File(from).listFiles().sortBy(_.getName).foreach { d =>
